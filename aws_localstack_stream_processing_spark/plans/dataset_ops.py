@@ -944,7 +944,9 @@ def _kmv_hash(d: str) -> str:
 
 def _kmv_hashes_sql(d: str) -> str:
     """The distinct (event_type, hash) table — the md5 pass every other
-    stage of the sketch reads; the Spark path persists it once."""
+    stage of the sketch reads. Both dialects inline it as a subquery;
+    the Spark path does not persist it (measured worse and reverted, see
+    :func:`sketch_kmv_distinct`)."""
     return (
         f"SELECT DISTINCT event_type, {_kmv_hash(d)} AS h "
         f"FROM {tbl('events', d)}"

@@ -45,8 +45,11 @@ def _package_zip() -> str:
     holds ``aws_localstack_stream_processing_spark/`` — the layout
     ``addPyFile`` needs for workers to ``import`` it. The filename carries
     a fingerprint over every module's (path, size, mtime_ns), so edits
-    self-invalidate and repeat sessions reuse the cached archive."""
+    self-invalidate and repeat sessions reuse the cached archive. It is
+    written to the temp directory (``tempfile.gettempdir()``, so
+    ``TMPDIR`` is honored)."""
     import hashlib
+    import tempfile
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
@@ -62,7 +65,9 @@ def _package_zip() -> str:
     for f in files:
         st = os.stat(f)
         h.update(f"{os.path.relpath(f, root)}|{st.st_size}|{st.st_mtime_ns}\n".encode())
-    out = f"/tmp/slsp_pkg_{h.hexdigest()[:16]}.zip"
+    out = os.path.join(
+        tempfile.gettempdir(), f"slsp_pkg_{h.hexdigest()[:16]}.zip"
+    )
     if os.path.exists(out):
         return out
     tmp = f"{out}.tmp.{os.getpid()}"
@@ -135,11 +140,20 @@ def concurrent_jobs(spark: SparkSession, *thunks):
     writes (``kv_upsert`` lives in the session's ``dataSourceManager``;
     an unpinned thread raised DATA_SOURCE_NOT_FOUND).
 
+    The pinning needs py4j's pinned-thread mode (a ``ClientServer``
+    gateway, the default). With thread pinning off the gateway is a
+    plain ``JavaGateway`` and the thunks run one after another instead;
+    a failure then skips the thunks after it.
+
     Returns the thunks' results in submission order; the first failure
     re-raises after all threads finish (the pool context waits)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
+    from py4j.clientserver import ClientServer
+    from pyspark import SparkContext, inheritable_thread_target
+
+    if not isinstance(SparkContext._gateway, ClientServer):
+        return [t() for t in thunks]
 
     def _wrap(fn):
         def run():

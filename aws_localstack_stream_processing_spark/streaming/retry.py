@@ -19,11 +19,12 @@ the driver holds no row data.
 from __future__ import annotations
 
 import os
-import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .sinks import swap_dirs
 
 
 class RetryingProcessor:
@@ -49,9 +50,12 @@ class RetryingProcessor:
         self.max_receives = max_receives
 
     def _read_or_none(self, spark: SparkSession, path: str) -> DataFrame | None:
-        if os.path.isdir(path) and any(
+        # swap_dirs' recovery step first: a crash inside the retry-buffer
+        # swap must reopen the buffer, not an empty one (whose records
+        # would then never reach the DLQ)
+        if any(
             f.endswith(".parquet") or f.startswith("batch_id=")
-            for f in os.listdir(path)
+            for f in swap_dirs(path)
         ):
             return spark.read.parquet(path)
         return None
@@ -81,21 +85,15 @@ class RetryingProcessor:
             )
         # Replace the retry buffer wholesale (tiny by design: only
         # currently-failing records live here). `again`'s lineage still reads
-        # the CURRENT buffer files, so never overwrite in place — write to a
-        # temp dir, then swap directories. The swap happens only after the
-        # write job has fully materialized `again`, so no plan re-execution
-        # can read deleted files (the persist() above is an optimization,
-        # not a correctness dependency).
+        # the CURRENT buffer files, so never overwrite in place — stage to a
+        # sibling, then swap directories (the crash-safe swap_dirs). The swap
+        # happens only after the write job has fully materialized `again`,
+        # so no plan re-execution can read deleted files (the persist()
+        # above is an optimization, not a correctness dependency).
         tmp = self.retry_path + ".tmp"
-        old = self.retry_path + ".old"
-        shutil.rmtree(tmp, ignore_errors=True)
         again.write.mode("overwrite").parquet(tmp)
         attempted.unpersist()
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(self.retry_path):
-            os.rename(self.retry_path, old)
-        os.rename(tmp, self.retry_path)
-        shutil.rmtree(old, ignore_errors=True)
+        swap_dirs(self.retry_path, tmp)
 
     def drain(self, spark: SparkSession, max_batches: int = 5) -> None:
         """Re-deliver the retry buffer with empty batches until it empties

@@ -12,181 +12,231 @@ which this composes with).
 At warehouse scale the anti-join is a broadcast of the batch's keys against
 the key column of the sink (or a MERGE on a Delta/Iceberg table — same
 logical contract, swap the implementation here).
+
+All three stores share one layout, :class:`BucketedStore`: a root of
+``<BUCKET_COL>=N/`` hive partitions plus a ``_slsp_meta.json`` sidecar
+recording the bucket count. Every rewrite of that layout — legacy
+migration, ``resplit``, ``compact()``, the SCD2 per-bucket MERGE — and
+the retry buffer of ``streaming/retry.py`` goes through one directory
+swap, :func:`swap_dirs`: stage the new data, rename each live directory
+to a backup, rename the staged directory to live, delete the backups
+last, and remove staging only after every swap of the call succeeded.
+Opening a store runs the swap's recovery step, so a crash at any step
+leaves a store that reads exactly its pre-swap or its post-swap rows.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
 
-class KeyedParquetSink:
-    """Append-only parquet table that behaves like a keyed KV store.
+def swap_dirs(
+    root: str, staged: str | None = None, names: list[str] | None = None
+) -> list[str]:
+    """The one crash-safe directory swap, and its recovery step.
 
-    Contract: ``key_col`` is a non-null content hash (the reference's
-    DynamoDB PK, signer/index.js:229-242) — a NULL key has no bucket
-    (``xxhash64(NULL)`` is NULL) and would bypass the probe.
+    ``staged`` is the fully written new data (step 1, done by the
+    caller), kept where Spark's file index never lists it: a sibling of
+    ``root``. Without ``names`` it replaces ``root`` whole; with
+    ``names`` it replaces only those child directories of ``root`` (one
+    per bucket), each from ``staged/<name>``. Each step runs for every
+    directory before the next step starts:
 
-    Layout: hash-bucketed by key — every row lands in partition
-    ``__bucket = pmod(xxhash64(key), n_buckets)``. The put-if-absent
-    probe then reads ONLY the buckets the batch's keys can live in
-    (hive partition pruning), so per-batch probe cost is
-    O(store/n_buckets × affected buckets), not O(store) — the same
-    layout lever ``Scd2ParquetSink`` uses for its MERGE, applied to the
-    read side. At 100 TB this is the difference between a full store
-    scan per micro-batch and a bounded bucket probe.
+    2. rename live to its backup ``.<name>.bak`` beside it — dot-prefixed,
+       so the file index skips it (a ``bucket=3.bak`` would read as a
+       partition value). A live directory that does not exist yet gets an
+       EMPTY backup, so a roll-back knows to remove what replaced it;
+    3. rename staged to live;
+    4. delete the backups;
+    5. remove ``staged`` — only after every swap of the call succeeded.
 
-    Bucket-count evolution (VERDICT r10 #6): the count is NOT baked into
-    readers — the store is self-describing via a ``_slsp_meta.json``
-    sidecar written on first write, adopted by every subsequent open
-    (so a sink constructed with the default count still probes a
-    32-bucket store correctly), and changed offline by :meth:`resplit`
-    exactly like an Iceberg bucket-spec evolution rewrite.
+    Recovery runs first on every call, and is the whole call when
+    ``staged`` is None — that is how a store is opened. Leftover backups
+    mean a swap was interrupted. If any backup's live directory is
+    missing, step 3 never finished: every backup is rolled back and
+    ``root`` reads exactly its pre-swap rows. Otherwise step 3 finished
+    and the backups are deleted: exactly the post-swap rows. Staging left
+    by a crash is overwritten by the next stage step. Returns ``root``'s
+    entries after recovery (``[]`` when it does not exist).
+
+    Recovery treats every backup it finds as a crashed swap, so no swap
+    of the same ``root`` may be in flight in another process: a store has
+    one writer, and offline rewrites run with the owning stream stopped.
+    """
+
+    def backup(live: str) -> str:
+        head, tail = os.path.split(live.rstrip("/"))
+        return os.path.join(head, f".{tail}.bak")
+
+    def listing() -> list[str]:
+        return os.listdir(root) if os.path.isdir(root) else []
+
+    lives = [root] if os.path.isdir(backup(root)) else []
+    lives += [
+        os.path.join(root, n[1:-4])
+        for n in listing()
+        if n.startswith(".") and n.endswith(".bak")
+    ]
+    roll_back = not all(os.path.isdir(live) for live in lives)
+    # a roll-back restores the missing directories last, so one that is
+    # interrupted still finds a missing directory and rolls back again
+    for live in sorted(lives, key=lambda p: not os.path.isdir(p)):
+        if roll_back:
+            shutil.rmtree(live, ignore_errors=True)
+            if os.listdir(backup(live)):
+                os.rename(backup(live), live)
+                continue
+        shutil.rmtree(backup(live))
+    if staged is None:
+        return listing()
+    if names is None:
+        pairs = [(staged, root)]
+    else:
+        os.makedirs(root, exist_ok=True)
+        pairs = [(os.path.join(staged, n), os.path.join(root, n)) for n in names]
+    for _, live in pairs:
+        if os.path.isdir(live):
+            os.rename(live, backup(live))
+        else:
+            os.makedirs(backup(live))
+    for new, live in pairs:
+        os.rename(new, live)
+    for _, live in pairs:
+        shutil.rmtree(backup(live))
+    shutil.rmtree(staged, ignore_errors=True)
+    return listing()
+
+
+class BucketedStore:
+    """A parquet table hash-bucketed into ``<BUCKET_COL>=N/`` partitions.
+
+    Subclasses supply the bucket function (:meth:`_bucket_expr`); the
+    base owns the layout and its evolution:
+
+    * self-description: the bucket count is NOT baked into readers — a
+      ``_slsp_meta.json`` sidecar written with the first data is adopted
+      by every later open (VERDICT r10 #6), so a sink constructed with the
+      default count still reads a resplit store correctly;
+    * schema-cached reads (r13, guide §6): the column set is fixed for a
+      store's lifetime, so one schema inference serves every per-batch
+      read (uncached, Spark runs an inference job per read);
+    * bucket-pruned reads: a batch-sized key set's buckets are a bounded
+      driver collect (≤ n_buckets values), and only those hive
+      partitions are scanned — per-batch cost O(store/n_buckets ×
+      affected buckets), not O(store);
+    * put-if-absent appends and bucket-pruned semi-joins;
+    * :meth:`resplit`, and crash-safe rewrites through :func:`swap_dirs`.
     """
 
     N_BUCKETS = 16
     BUCKET_COL = "__bucket"
     META_FILE = "_slsp_meta.json"
 
-    def __init__(self, path: str, key_col: str, n_buckets: int | None = None):
+    def __init__(self, path: str, n_buckets: int | None = None):
         self.path = path
-        self.key_col = key_col
         self.n_buckets = int(n_buckets or self.N_BUCKETS)
-        # test seam for the compact() concurrent-append guard
-        self._compact_pre_swap = None
-        # store-schema cache (r13, guide §6): the column set is fixed for
-        # the store's lifetime (payload columns + BUCKET_COL), so one
-        # schema inference serves every subsequent per-batch read; the
-        # offline rewrites preserve the schema (resplit still resets it
-        # out of caution since it mutates n_buckets)
         self._store_schema = None
 
-    def _read_store(self, spark: SparkSession) -> DataFrame:
-        """Store scan with the schema cached after the first read —
-        uncached, Spark runs a schema-inference job per read, which the
-        probe path pays once per micro-batch."""
-        if self._store_schema is None:
-            df = spark.read.parquet(self.path)
-            self._store_schema = df.schema
-            return df
-        return spark.read.schema(self._store_schema).parquet(self.path)
+    def _bucket_expr(self):
+        """The store's bucket function, over the batch's key columns."""
+        raise NotImplementedError
 
     # -- self-describing layout ------------------------------------------
-    def _meta_path(self) -> str:
-        return os.path.join(self.path, self.META_FILE)
+    def _meta_path(self, root: str | None = None) -> str:
+        return os.path.join(root or self.path, self.META_FILE)
 
-    def _sync_meta(self) -> None:
-        """Adopt the store's on-disk bucket count, if recorded. Stores
-        written before the meta sidecar existed keep the constructor's
-        count (back-compat: every pre-meta store used N_BUCKETS=16)."""
+    def _sync_meta(self) -> list[str]:
+        """Open the store: run :func:`swap_dirs`' recovery step, then adopt
+        the on-disk bucket count, if recorded. Stores written before the
+        meta sidecar existed keep the constructor's count (every pre-meta
+        store used the class default). Returns the root's entries."""
+        entries = swap_dirs(self.path)
         try:
             with open(self._meta_path()) as f:
                 self.n_buckets = int(json.load(f)["n_buckets"])
         except (OSError, ValueError, KeyError):
             pass
+        return entries
 
-    def _write_meta(self) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        with open(self._meta_path(), "w") as f:
+    def _write_meta(self, root: str | None = None) -> None:
+        os.makedirs(root or self.path, exist_ok=True)
+        with open(self._meta_path(root), "w") as f:
             json.dump({"n_buckets": self.n_buckets}, f)
 
-    def _legacy_flat_files(self) -> list[str]:
-        """Pre-bucketing stores wrote ``part-*.parquet`` at the top level;
-        the bucketed layout puts every data file under ``__bucket=``."""
-        if not os.path.isdir(self.path):
-            return []
-        return sorted(
-            os.path.join(self.path, f)
-            for f in os.listdir(self.path)
-            if f.endswith(".parquet")
-        )
-
-    def exists(self, spark: SparkSession) -> bool:
-        """True iff a bucketed store is present at ``path``. Fails LOUDLY
-        on a legacy flat-layout store (ADVICE r10): silently returning
-        False would skip the put-if-absent probe (duplicate keys appended)
-        and the mixed flat+partitioned directory would then break
-        partition discovery on read. Run :meth:`migrate_legacy` once.
-        """
-        if self._legacy_flat_files():
+    def exists(self, spark: SparkSession | None = None) -> bool:
+        """True iff a bucketed store is present at ``path`` (after
+        recovering an interrupted swap). Fails LOUDLY on a legacy
+        flat-layout store (ADVICE r10): silently returning False would
+        skip the put-if-absent probe (duplicate keys appended) and the
+        mixed flat+partitioned directory would then break partition
+        discovery on read. Run ``migrate_legacy`` once."""
+        entries = self._sync_meta()
+        if any(f.endswith(".parquet") for f in entries):
             raise RuntimeError(
                 f"{self.path} holds a legacy flat-layout store "
                 f"(top-level .parquet files); the bucketed probe cannot "
                 f"see its keys. Run migrate_legacy(spark) once (with the "
                 f"owning stream stopped) before writing."
             )
-        if os.path.isdir(self.path) and any(
-            f.startswith(f"{self.BUCKET_COL}=") for f in os.listdir(self.path)
-        ):
-            self._sync_meta()
-            return True
-        return False
+        return any(f.startswith(f"{self.BUCKET_COL}=") for f in entries)
 
-    def migrate_legacy(self, spark: SparkSession) -> int:
-        """One-shot migration of a pre-bucketing flat store into the
-        bucketed layout (ADVICE r10): read the top-level files, route
-        every row to its bucket partition, retire the flat files. Must
-        run with the owning stream stopped (same precondition as
-        :meth:`compact`). Returns the number of flat files migrated;
-        idempotent (no flat files ⇒ no-op).
+    # -- reads ---------------------------------------------------------------
+    def _infer_schema(self, spark: SparkSession):
+        return spark.read.parquet(self.path).schema
 
-        Crash tolerance (ADVICE r11): the original append-then-delete
-        order could crash between the two and leave the rows present in
-        BOTH layouts — a re-run would then append them a second time
-        despite the idempotence claim. Instead the migrated layout is
-        staged to a sibling directory (meta sidecar included, so it
-        travels with the data) and swapped in with the same two-rename
-        protocol as :meth:`resplit`. Any bucketed rows already present
-        (a crashed earlier migration) are unioned in and key-deduped, so
-        every crash point re-runs to the same converged store. A crash
-        BETWEEN the two renames leaves the ``.migrate_old`` backup;
-        recovery = rename it back."""
-        import glob as _glob
-        import shutil
+    def _read_store(self, spark: SparkSession) -> DataFrame:
+        if self._store_schema is None:
+            self._store_schema = self._infer_schema(spark)
+        return spark.read.schema(self._store_schema).parquet(self.path)
 
-        flat = self._legacy_flat_files()
-        if not flat:
-            return 0
-        rows = spark.read.parquet(*flat).withColumn(
-            self.BUCKET_COL, self._bucket_expr()
-        )
-        prior_dirs = sorted(
-            _glob.glob(os.path.join(self.path, f"{self.BUCKET_COL}=*"))
-        )
-        if prior_dirs:
-            prior = spark.read.option("basePath", self.path).parquet(
-                *prior_dirs
-            )
-            rows = prior.unionByName(rows).dropDuplicates([self.key_col])
-        staged = self.path.rstrip("/") + ".migrate"
-        shutil.rmtree(staged, ignore_errors=True)
-        rows.write.mode("overwrite").partitionBy(self.BUCKET_COL).parquet(
-            staged
-        )
-        with open(os.path.join(staged, self.META_FILE), "w") as f:
-            json.dump({"n_buckets": self.n_buckets}, f)
-        backup = self.path.rstrip("/") + ".migrate_old"
-        shutil.rmtree(backup, ignore_errors=True)
-        os.rename(self.path, backup)
-        os.rename(staged, self.path)
-        shutil.rmtree(backup)
-        return len(flat)
-
-    def _bucket_expr(self):
+    def _pruned(self, spark: SparkSession, bucketed: DataFrame) -> DataFrame:
+        """The store rows of the buckets that ``bucketed`` (batch-sized,
+        carrying BUCKET_COL) touches — hive partition pruning."""
         from pyspark.sql import functions as F
 
-        return F.pmod(
-            F.xxhash64(F.col(self.key_col)), F.lit(self.n_buckets)
-        ).cast("int")
+        buckets = [
+            r[0] for r in bucketed.select(self.BUCKET_COL).distinct().collect()
+        ]
+        return self._read_store(spark).filter(
+            F.col(self.BUCKET_COL).isin(buckets)
+        )
 
+    def _semi_join(
+        self, spark: SparkSession, keys: DataFrame, cols: list[str]
+    ) -> DataFrame:
+        """Store rows whose ``cols`` appear in ``keys`` (batch-bounded):
+        bucket-pruned read, semi-joined against the BROADCAST key set —
+        the store is never shuffled or broadcast."""
+        from pyspark.sql import functions as F
+
+        self._sync_meta()
+        want = keys.select(*cols).distinct().withColumn(
+            self.BUCKET_COL, self._bucket_expr()
+        )
+        return (
+            self._pruned(spark, want)
+            .join(F.broadcast(want.drop(self.BUCKET_COL)), cols, "left_semi")
+            .drop(self.BUCKET_COL)
+        )
+
+    def read(self, spark: SparkSession) -> DataFrame:
+        self._sync_meta()
+        return self._read_store(spark).drop(self.BUCKET_COL)
+
+    # -- writes ----------------------------------------------------------
     @staticmethod
-    def probe_plan(seen: DataFrame, fresh: DataFrame, key_col: str) -> DataFrame:
+    def probe_plan(
+        seen: DataFrame, fresh: DataFrame, key_col: str | list[str]
+    ) -> DataFrame:
         """The put-if-absent probe's pure plan (plan-lintable, like
-        ``Scd2ParquetSink.merge_plan``): given the store's key column
-        (already bucket-pruned) and the deduped batch, return the
-        batch rows whose keys are NOT in the store.
+        ``Scd2ParquetSink.merge_plan``): given the store's key column(s)
+        (already bucket-pruned) and the deduped batch, return the batch
+        rows whose key is NOT in the store. ``key_col`` is one column
+        name or a list of them (a composite key).
 
         Broadcast direction matters at scale (r10, found by the plan
         audit that fixed the SCD2 merge): the naive
@@ -207,6 +257,151 @@ class KeyedParquetSink:
         ).distinct()
         return fresh.join(F.broadcast(hits), key_col, "left_anti")
 
+    def _put_if_absent(
+        self, df: DataFrame, keys: list[str], seen: DataFrame | None = None
+    ) -> None:
+        """The one put-if-absent append on the (composite) key ``keys``.
+        Within-batch duplicates collapse first; cross-batch and cross-run
+        duplicates drop via :meth:`probe_plan` against the bucket-pruned
+        store rows, or against ``seen`` when the caller already probed
+        (see ``BandIndexSink.append_batch``)."""
+        spark = df.sparkSession
+        present = self.exists(spark)  # syncs n_buckets before bucketing
+        fresh = df.dropDuplicates(keys).withColumn(
+            self.BUCKET_COL, self._bucket_expr()
+        )
+        if not present:
+            fresh.write.mode("append").partitionBy(self.BUCKET_COL).parquet(
+                self.path
+            )
+            self._write_meta()
+            return
+        # persist the deduped batch across its two consumers (the bucket
+        # collect and the probe+write job) — unpersisted, the batch dedup
+        # re-ran per job (r13, guide §5; batch-bounded)
+        fresh = fresh.persist()
+        try:
+            if seen is None:
+                seen = self._pruned(spark, fresh)
+            self.probe_plan(seen.select(*keys), fresh, keys).write.mode(
+                "append"
+            ).partitionBy(self.BUCKET_COL).parquet(self.path)
+        finally:
+            fresh.unpersist()
+
+    def _stage(self, df: DataFrame) -> str:
+        """Step 1 of :func:`swap_dirs`: write ``df`` (BUCKET_COL set)
+        bucket-partitioned to the store's staging sibling — a different
+        path, so Spark's read-and-overwrite restriction never applies."""
+        staged = self.path.rstrip("/") + ".staging"
+        df.write.mode("overwrite").partitionBy(self.BUCKET_COL).parquet(staged)
+        return staged
+
+    def resplit(self, spark: SparkSession, n_buckets: int) -> None:
+        """Offline bucket-count evolution (VERDICT r10 #6): rewrite the
+        store under a new bucket count. At 100 TB a fixed count
+        eventually leaves each bucket too large for a bounded probe;
+        doubling the count is the standard growth step (Iceberg
+        bucket-spec evolution, Delta OPTIMIZE ZORDER re-layout — same
+        full-rewrite cost, amortized over the store's lifetime).
+
+        Every row re-routes to its bucket under the new count — a key's
+        old and new bucket differ, so this is a full rewrite: the new
+        layout is staged with the meta sidecar recording the new count
+        written INTO the staged directory, so the count travels with the
+        data (ADVICE r11: writing it after the swap let a fresh sink
+        probe a resplit store at the old count and duplicate keys), and
+        the whole store is replaced by :func:`swap_dirs`. A crash at any
+        step reopens as either the old store with its old count or the
+        new store with its new count. Must run with the owning stream
+        stopped.
+        """
+        if not self.exists(spark):
+            raise RuntimeError(f"no bucketed store at {self.path}")
+        if n_buckets == self.n_buckets:
+            return
+        rows = self._read_store(spark).drop(self.BUCKET_COL)
+        self.n_buckets = int(n_buckets)
+        staged = self._stage(
+            rows.withColumn(self.BUCKET_COL, self._bucket_expr())
+        )
+        self._write_meta(staged)
+        swap_dirs(self.path, staged)
+        self._store_schema = None
+
+
+class KeyedParquetSink(BucketedStore):
+    """Append-only parquet table that behaves like a keyed KV store.
+
+    Contract: ``key_col`` is a non-null content hash (the reference's
+    DynamoDB PK, signer/index.js:229-242) — a NULL key has no bucket
+    (``xxhash64(NULL)`` is NULL) and would bypass the probe.
+
+    Layout: hash-bucketed by key — every row lands in partition
+    ``__bucket = pmod(xxhash64(key), n_buckets)``. The put-if-absent
+    probe then reads ONLY the buckets the batch's keys can live in
+    (hive partition pruning), so per-batch probe cost is
+    O(store/n_buckets × affected buckets), not O(store) — the same
+    layout lever ``Scd2ParquetSink`` uses for its MERGE, applied to the
+    read side. At 100 TB this is the difference between a full store
+    scan per micro-batch and a bounded bucket probe. The bucket count
+    lives in the store's meta sidecar and changes offline by
+    :meth:`resplit`, exactly like an Iceberg bucket-spec evolution.
+    """
+
+    def __init__(self, path: str, key_col: str, n_buckets: int | None = None):
+        super().__init__(path, n_buckets)
+        self.key_col = key_col
+        # test seam for the compact() concurrent-append guard
+        self._compact_pre_swap = None
+
+    def _bucket_expr(self):
+        from pyspark.sql import functions as F
+
+        return F.pmod(
+            F.xxhash64(F.col(self.key_col)), F.lit(self.n_buckets)
+        ).cast("int")
+
+    def migrate_legacy(self, spark: SparkSession) -> int:
+        """One-shot migration of a pre-bucketing flat store into the
+        bucketed layout (ADVICE r10): read the top-level files, route
+        every row to its bucket partition, retire the flat files. Must
+        run with the owning stream stopped (same precondition as
+        :meth:`compact`). Returns the number of flat files migrated;
+        idempotent (no flat files ⇒ no-op).
+
+        Crash tolerance (ADVICE r11): the migrated layout is staged with
+        its meta sidecar and replaces the whole store through
+        :func:`swap_dirs`, so a crash at any step reopens as either the
+        flat store or the migrated one — never rows in BOTH layouts,
+        which a re-run would append a second time. Any bucketed rows
+        already present are unioned in and key-deduped, so every re-run
+        converges to the same store."""
+        import glob as _glob
+
+        flat = sorted(
+            os.path.join(self.path, f)
+            for f in self._sync_meta()
+            if f.endswith(".parquet")
+        )
+        if not flat:
+            return 0
+        rows = spark.read.parquet(*flat).withColumn(
+            self.BUCKET_COL, self._bucket_expr()
+        )
+        prior_dirs = sorted(
+            _glob.glob(os.path.join(self.path, f"{self.BUCKET_COL}=*"))
+        )
+        if prior_dirs:
+            prior = spark.read.option("basePath", self.path).parquet(
+                *prior_dirs
+            )
+            rows = prior.unionByName(rows).dropDuplicates([self.key_col])
+        staged = self._stage(rows)
+        self._write_meta(staged)
+        swap_dirs(self.path, staged)
+        return len(flat)
+
     def upsert_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch hook: put-if-absent per key.
 
@@ -218,43 +413,7 @@ class KeyedParquetSink:
         those hive partitions, and only batch-sized key sets ever ride
         a broadcast.
         """
-        from pyspark.sql import functions as F
-
-        spark = batch_df.sparkSession
-        present = self.exists(spark)  # syncs n_buckets from meta
-        fresh = batch_df.dropDuplicates([self.key_col]).withColumn(
-            self.BUCKET_COL, self._bucket_expr()
-        )
-        if present:
-            # persist the deduped batch across its two consumers (the
-            # bucket collect and the probe+write job) — unpersisted, the
-            # batch dedup re-ran per job (r13, guide §5; batch-bounded)
-            fresh = fresh.persist()
-            try:
-                buckets = [
-                    r[0]
-                    for r in fresh.select(self.BUCKET_COL)
-                    .distinct()
-                    .collect()
-                ]
-                seen = (
-                    self._read_store(spark)
-                    .filter(F.col(self.BUCKET_COL).isin(buckets))
-                    .select(self.key_col)
-                )
-                self.probe_plan(seen, fresh, self.key_col).write.mode(
-                    "append"
-                ).partitionBy(self.BUCKET_COL).parquet(self.path)
-            finally:
-                fresh.unpersist()
-        else:
-            fresh.write.mode("append").partitionBy(self.BUCKET_COL).parquet(
-                self.path
-            )
-            self._write_meta()
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return self._read_store(spark).drop(self.BUCKET_COL)
+        self._put_if_absent(batch_df, [self.key_col])
 
     def fetch(self, spark: SparkSession, keys: DataFrame) -> DataFrame:
         """Bucket-pruned point lookup (r13, for the streaming near-dup
@@ -263,24 +422,8 @@ class KeyedParquetSink:
         buckets| partitions — the put-if-absent probe's read path, exposed
         for callers that need the matched rows' PAYLOAD (e.g. fetching
         candidate docs' shingle sets for Jaccard verification) rather
-        than the absence set. Only the batch-sized key set rides a
-        broadcast; the store is never shuffled or broadcast."""
-        from pyspark.sql import functions as F
-
-        self._sync_meta()
-        want = keys.select(self.key_col).distinct().withColumn(
-            self.BUCKET_COL, self._bucket_expr()
-        )
-        buckets = [
-            r[0] for r in want.select(self.BUCKET_COL).distinct().collect()
-        ]
-        return (
-            self._read_store(spark)
-            .filter(F.col(self.BUCKET_COL).isin(buckets))
-            .join(F.broadcast(want.drop(self.BUCKET_COL)), self.key_col,
-                  "left_semi")
-            .drop(self.BUCKET_COL)
-        )
+        than the absence set."""
+        return self._semi_join(spark, keys, [self.key_col])
 
     def _bucket_files(self, b: int) -> list[str]:
         import glob
@@ -304,32 +447,31 @@ class KeyedParquetSink:
         a single file, bucket-locally: rows only move WITHIN their
         bucket (one exchange keyed on the bucket column routes each
         bucket to one task — the same job shape as a Delta OPTIMIZE
-        over selected partitions), and untouched buckets are not
-        rewritten (dynamic partition overwrite). The put-if-absent
-        contract is unchanged — same keys, same buckets, fewer files.
+        over selected partitions), and only those bucket directories are
+        swapped in (:func:`swap_dirs`); untouched buckets are not
+        rewritten. The put-if-absent contract is unchanged — same keys,
+        same buckets, fewer files.
 
         Bucket file counts come from a driver-side directory listing
         (bounded: n_buckets entries); at warehouse scale that listing
         is the table manifest. Returns the compacted bucket ids.
 
         Concurrency contract (ADVICE r10): compact() must run with the
-        owning streaming query STOPPED — dynamic partition overwrite
-        replaces a todo bucket wholesale, so a row appended between the
-        read and the commit would be silently deleted. Enforced, not
-        just documented: each todo bucket's file listing is re-checked
-        after the merge materializes and immediately before the swap;
-        any change aborts the whole compaction (nothing written, the
-        appended files intact). The residual read-check-swap window is
-        a few milliseconds vs the unguarded read-to-commit seconds; a
-        production deployment closes it entirely with a metadata-commit
-        table format (Delta/Iceberg OPTIMIZE) or the manifest pattern
+        owning streaming query STOPPED — the swap replaces a todo bucket
+        wholesale, so a row appended between the read and the swap would
+        be silently deleted. Enforced, not just documented: each todo
+        bucket's file listing is re-checked after the rewrite is staged
+        and immediately before the swap; any change aborts the whole
+        compaction (nothing swapped, the appended files intact). The
+        residual check-swap window is a few milliseconds vs the
+        unguarded read-to-commit seconds; a production deployment closes
+        it entirely with a metadata-commit table format (Delta/Iceberg
+        OPTIMIZE) or the manifest pattern
         ``sources/manifest_datasource.py`` demonstrates.
 
-        Crash tolerance: the rewrite rides Spark's dynamic-partition-
-        overwrite committer (stage, then swap per partition); a crash
-        mid-commit can leave an affected bucket with the old files
-        removed — plain-parquet overwrite has no metadata transaction.
-        Compaction is safe to re-run (idempotent given the same
+        Crash tolerance: a crash at any step of the swap reopens as
+        either every todo bucket's old files or every one's compacted
+        file. Compaction is safe to re-run (idempotent given the same
         inputs).
         """
         from pyspark.sql import functions as F
@@ -341,89 +483,34 @@ class KeyedParquetSink:
         ]
         if not todo:
             return []
-        merged = (
-            spark.read.parquet(self.path)
+        staged = self._stage(
+            self._read_store(spark)
             .filter(F.col(self.BUCKET_COL).isin(todo))
             .repartition(F.col(self.BUCKET_COL))
         )
-        # cut lineage from self.path BEFORE overwriting it (Spark forbids
-        # read-and-overwrite of the same path in one job — the same
-        # discipline as Scd2ParquetSink.merge_batch)
-        out = merged.localCheckpoint(eager=True)
         if self._compact_pre_swap is not None:  # test seam
             self._compact_pre_swap()
         changed = [b for b in todo if self._bucket_files(b) != listing[b]]
         if changed:
+            shutil.rmtree(staged, ignore_errors=True)
             raise RuntimeError(
                 f"compact() aborted: buckets {changed} changed during the "
                 f"rewrite — a streaming query is still appending to "
                 f"{self.path}; stop it before compacting."
             )
-        prev_mode = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            out.write.mode("overwrite").partitionBy(self.BUCKET_COL).parquet(
-                self.path
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_mode
-            )
+        swap_dirs(self.path, staged, [f"{self.BUCKET_COL}={b}" for b in todo])
         return todo
 
-    def resplit(self, spark: SparkSession, n_buckets: int) -> None:
-        """Offline bucket-count evolution (VERDICT r10 #6): rewrite the
-        store under a new bucket count. At 100 TB a fixed count
-        eventually leaves each bucket too large for a bounded probe;
-        doubling the count is the standard growth step (Iceberg
-        bucket-spec evolution, Delta OPTIMIZE ZORDER re-layout — same
-        full-rewrite cost, amortized over the store's lifetime).
 
-        Every row re-routes to ``pmod(xxhash64(key), new_n)`` — a key's
-        old and new bucket differ, so this is a full rewrite, NOT a
-        dynamic partition overwrite: the new layout is staged to a
-        sibling directory — with the meta sidecar recording the new
-        count written INTO the staged dir, so the count travels with
-        the data through the swap (ADVICE r11: writing it after the
-        swap left a crash window in which a fresh sink would probe a
-        resplit store at the constructor default and duplicate keys) —
-        and swapped in with two renames (crash between them leaves the
-        ``.resplit_old`` backup; recovery = rename it back). Must run
-        with the owning stream stopped.
-        """
-        import shutil
-
-        if not self.exists(spark):
-            raise RuntimeError(f"no bucketed store at {self.path}")
-        if n_buckets == self.n_buckets:
-            return
-        self._store_schema = None
-        df = spark.read.parquet(self.path).drop(self.BUCKET_COL)
-        self.n_buckets = int(n_buckets)
-        staged = self.path.rstrip("/") + f".resplit{n_buckets}"
-        df.withColumn(self.BUCKET_COL, self._bucket_expr()).write.mode(
-            "overwrite"
-        ).partitionBy(self.BUCKET_COL).parquet(staged)
-        with open(os.path.join(staged, self.META_FILE), "w") as f:
-            json.dump({"n_buckets": self.n_buckets}, f)
-        backup = self.path.rstrip("/") + ".resplit_old"
-        os.rename(self.path, backup)
-        os.rename(staged, self.path)
-        shutil.rmtree(backup)
-
-
-class BandIndexSink:
+class BandIndexSink(BucketedStore):
     """Bucketed MinHash band inverted index — the streaming near-dup
     gate's standing state (r13, VERDICT r12 #2): rows ``(band INT,
     bv STRING, doc_id BIGINT)``, hash-bucketed on the BAND KEY
     ``(band, bv)`` so a micro-batch's probe reads only the buckets its
     own band values can live in — the ``KeyedParquetSink`` bucket-pruning
-    lever applied to an index whose key is legitimately NON-unique (many
-    documents share a band bucket; that collision IS the candidate
-    signal), which is exactly why the put-if-absent sink itself cannot
-    hold it: its probe dedups by key.
+    lever applied to an index whose band key is legitimately NON-unique
+    (many documents share a band bucket; that collision IS the candidate
+    signal), which is why its put-if-absent key is the full composite.
 
     Idempotence contract: :meth:`append_batch` is put-if-absent on the
     full composite ``(band, bv, doc_id)`` — a redelivered batch re-derives
@@ -437,49 +524,7 @@ class BandIndexSink:
     and semi-joins them against the BROADCAST batch band keys; the store
     is never shuffled, never broadcast, never scanned whole. At 100 TB
     the store is the corpus's band table (4 rows/doc here) — bucket
-    count evolves offline exactly like ``KeyedParquetSink.resplit``."""
-
-    N_BUCKETS = 16
-    BUCKET_COL = "__bucket"
-    META_FILE = "_slsp_meta.json"
-
-    def __init__(self, path: str, n_buckets: int | None = None):
-        self.path = path
-        self.n_buckets = int(n_buckets or self.N_BUCKETS)
-        # store-schema cache (r13, guide §6): (band, bv, doc_id, bucket)
-        # is fixed for the store's lifetime — one schema inference serves
-        # every per-batch probe/append read
-        self._store_schema = None
-
-    def _read_store(self, spark: SparkSession) -> DataFrame:
-        if self._store_schema is None:
-            df = spark.read.parquet(self.path)
-            self._store_schema = df.schema
-            return df
-        return spark.read.schema(self._store_schema).parquet(self.path)
-
-    def _meta_path(self) -> str:
-        return os.path.join(self.path, self.META_FILE)
-
-    def _sync_meta(self) -> None:
-        try:
-            with open(self._meta_path()) as f:
-                self.n_buckets = int(json.load(f)["n_buckets"])
-        except (OSError, ValueError, KeyError):
-            pass
-
-    def _write_meta(self) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        with open(self._meta_path(), "w") as f:
-            json.dump({"n_buckets": self.n_buckets}, f)
-
-    def exists(self) -> bool:
-        if os.path.isdir(self.path) and any(
-            f.startswith(f"{self.BUCKET_COL}=") for f in os.listdir(self.path)
-        ):
-            self._sync_meta()
-            return True
-        return False
+    count evolves offline through :meth:`resplit`."""
 
     def _bucket_expr(self):
         from pyspark.sql import functions as F
@@ -510,80 +555,18 @@ class BandIndexSink:
         necessarily matches its ``(band, bv)`` key, so it is in the
         probe result; the near-dup gate's appended rows are a subset of
         the batch band rows it probed with."""
-        from pyspark.sql import functions as F
-
-        spark = bands_df.sparkSession
-        present = self.exists()  # syncs n_buckets before bucketing
-        fresh = bands_df.select("band", "bv", "doc_id").dropDuplicates(
-            ["band", "bv", "doc_id"]
-        ).withColumn(self.BUCKET_COL, self._bucket_expr())
-        if present:
-            # persist the deduped band rows across the bucket collect and
-            # the probe+write job (r13, guide §5; batch-bounded)
-            fresh = fresh.persist()
-            try:
-                if seen is None:
-                    buckets = [
-                        r[0]
-                        for r in fresh.select(self.BUCKET_COL)
-                        .distinct()
-                        .collect()
-                    ]
-                    seen = (
-                        self._read_store(spark)
-                        .filter(F.col(self.BUCKET_COL).isin(buckets))
-                        .select("band", "bv", "doc_id")
-                    )
-                else:
-                    seen = seen.select("band", "bv", "doc_id")
-                hits = seen.join(
-                    F.broadcast(fresh.select("band", "bv", "doc_id")),
-                    ["band", "bv", "doc_id"],
-                    "left_semi",
-                )
-                fresh.join(
-                    F.broadcast(hits), ["band", "bv", "doc_id"], "left_anti"
-                ).write.mode("append").partitionBy(self.BUCKET_COL).parquet(
-                    self.path
-                )
-            finally:
-                fresh.unpersist()
-        else:
-            fresh.write.mode("append").partitionBy(self.BUCKET_COL).parquet(
-                self.path
-            )
-            self._write_meta()
+        key = ["band", "bv", "doc_id"]
+        self._put_if_absent(bands_df.select(*key), key, seen)
 
     def probe(self, spark: SparkSession, bands_df: DataFrame) -> DataFrame:
         """Store rows whose ``(band, bv)`` key appears in the batch's
         band set: bucket-pruned read, semi-join against the BROADCAST
         batch keys. The result is the candidate postings list — every
         indexed doc sharing a band bucket with some batch doc."""
-        from pyspark.sql import functions as F
-
-        self._sync_meta()
-        want = bands_df.select("band", "bv").distinct().withColumn(
-            self.BUCKET_COL, self._bucket_expr()
-        )
-        buckets = [
-            r[0] for r in want.select(self.BUCKET_COL).distinct().collect()
-        ]
-        return (
-            self._read_store(spark)
-            .filter(F.col(self.BUCKET_COL).isin(buckets))
-            .join(
-                F.broadcast(want.drop(self.BUCKET_COL)),
-                ["band", "bv"],
-                "left_semi",
-            )
-            .drop(self.BUCKET_COL)
-        )
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return self._read_store(spark).drop(self.BUCKET_COL)
+        return self._semi_join(spark, bands_df, ["band", "bv"])
 
 
-class Scd2ParquetSink:
+class Scd2ParquetSink(BucketedStore):
     """Streaming CDC → type-2 history MERGE (SURVEY §2.1 S8 extended).
 
     The reference's keyed sink keeps only the LATEST value per key
@@ -610,7 +593,8 @@ class Scd2ParquetSink:
          ROW_NUMBER/LEAD rebuild version numbers and validity intervals —
          every window partitions on ``user_id``, one hash exchange;
       6. the merge result is written once to a staging sibling and ONLY
-         the affected bucket directories are swapped in (driver rename).
+         the affected bucket directories are swapped in
+         (:func:`swap_dirs`).
 
     Delivery contract and the out-of-order GUARD (VERDICT r10 #1): the
     merge is exact under per-key in-order delivery of NEW change records
@@ -665,57 +649,28 @@ class Scd2ParquetSink:
     MERGE file sizing and evolves offline via :meth:`resplit`; the
     merge result is materialized exactly once, into a staging sibling
     directory, then swapped in per affected bucket
-    (:meth:`_swap_affected_buckets` — writing to a different path keeps
-    clear of Spark's read-and-overwrite restriction without the extra
-    ``localCheckpoint`` materialization pass it used to require)."""
+    (:meth:`_swap_affected_buckets`)."""
 
     N_BUCKETS = 8
-    META_FILE = "_slsp_meta.json"
-
-    def __init__(self, path: str, n_buckets: int | None = None):
-        self.path = path
-        self.n_buckets = int(n_buckets or self.N_BUCKETS)
-        # superset-schema cache (r13): the sampled-footer schema is
-        # invariant for the store's lifetime — the ONLY drift this store
-        # can exhibit is the two optional guard-metadata columns, and the
-        # superset construction always includes them — so one footer
-        # sample serves every subsequent merge batch (uncached it cost a
-        # Spark schema-inference job per micro-batch)
-        self._hist_schema = None
+    BUCKET_COL = "bucket"
 
     @property
     def quarantine_path(self) -> str:
         return self.path.rstrip("/") + "_quarantine"
 
-    def _meta_path(self) -> str:
-        return os.path.join(self.path, self.META_FILE)
+    def _bucket_expr(self):
+        from pyspark.sql import functions as F
 
-    def _sync_meta(self) -> None:
-        try:
-            with open(self._meta_path()) as f:
-                self.n_buckets = int(json.load(f)["n_buckets"])
-        except (OSError, ValueError, KeyError):
-            pass
+        return F.pmod("user_id", F.lit(self.n_buckets)).cast("int")
 
-    def _write_meta(self) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        with open(self._meta_path(), "w") as f:
-            json.dump({"n_buckets": self.n_buckets}, f)
-
-    def exists(self) -> bool:
-        import glob
-
-        if glob.glob(os.path.join(self.path, "bucket=*")):
-            self._sync_meta()
-            return True
-        return False
-
-    def _read_history(self, spark: SparkSession) -> DataFrame:
+    def _infer_schema(self, spark: SparkSession):
         """Every read of the history table uses an EXPLICIT superset
-        schema (ADVICE r12, refining the r11 fix): after the first merge
-        over a pre-r11 store, only the affected buckets carry
-        ``seen_ts_s``/``seen_event_id`` (dynamic partition overwrite
-        rewrites nothing else), and a plain parquet read infers the
+        schema (ADVICE r12, refining the r11 fix), cached like every
+        store schema — the ONLY drift this store can exhibit is the two
+        optional guard-metadata columns, and the superset always
+        includes them. After the first merge over a pre-r11 store, only
+        the affected buckets carry ``seen_ts_s``/``seen_event_id`` (no
+        other bucket is rewritten), and a plain parquet read infers the
         schema from an ARBITRARY file — so the guard's
         ``"seen_ts_s" in hist.columns`` checks were nondeterministic:
         when a legacy file won inference, existing guard metadata was
@@ -739,21 +694,18 @@ class Scd2ParquetSink:
         ones (pinned by
         ``test_mixed_schema_store_guard_metadata_deterministic``).
 
-        The sample uses a local ``glob`` like :meth:`exists` /
-        :meth:`needs_rebuild`; on an object store this becomes one
-        ``FileSystem.listStatus`` of one bucket directory — still O(1)
-        in store size."""
+        The sample uses a local ``glob`` like :meth:`needs_rebuild`; on
+        an object store this becomes one ``FileSystem.listStatus`` of one
+        bucket directory — still O(1) in store size."""
         import glob as _glob
 
         from pyspark.sql.types import IntegerType, StructField, StructType
 
-        if self._hist_schema is not None:
-            return spark.read.schema(self._hist_schema).parquet(self.path)
         files = sorted(
             _glob.glob(os.path.join(self.path, "bucket=*", "*.parquet"))
         )
         if not files:  # empty store: preserve the old failure mode
-            return spark.read.parquet(self.path)
+            return super()._infer_schema(spark)
         sampled = spark.read.parquet(files[0]).schema
         by_name = {f.name: f for f in sampled.fields}
         fields = [f for f in sampled.fields if f.name != "bucket"]
@@ -769,8 +721,7 @@ class Scd2ParquetSink:
                 )
             )
         fields.append(StructField("bucket", IntegerType(), True))
-        self._hist_schema = StructType(fields)
-        return spark.read.schema(self._hist_schema).parquet(self.path)
+        return StructType(fields)
 
     @staticmethod
     def merge_plan(cand: DataFrame) -> DataFrame:
@@ -912,9 +863,7 @@ class Scd2ParquetSink:
         # evaluations per batch, r14 phase profile; guide §5)
         cand = batch_df.select(
             "user_id", "attr", "ts_s", "event_id"
-        ).withColumn(
-            "bucket", F.pmod("user_id", F.lit(self.n_buckets)).cast("int")
-        ).persist()
+        ).withColumn("bucket", self._bucket_expr()).persist()
         released = [cand]
         buckets = [
             r.bucket for r in cand.select("bucket").distinct().collect()
@@ -925,7 +874,7 @@ class Scd2ParquetSink:
         hist = None
         if present:
             hist = (
-                self._read_history(spark)
+                self._read_store(spark)
                 .filter(F.col("bucket").isin(buckets))
                 .persist()
             )
@@ -1000,18 +949,6 @@ class Scd2ParquetSink:
                 F.col("__seen.t").alias("seen_ts_s"),
                 F.col("__seen.e").alias("seen_event_id"),
             )
-            # One write job per batch (r14, guide §5): the merge result is
-            # written to a staging sibling — a DIFFERENT path, so Spark's
-            # read-and-overwrite restriction never applies and the eager
-            # localCheckpoint that existed only to cut lineage from
-            # self.path (a full extra materialization pass per micro-batch)
-            # is gone — then each affected bucket directory is swapped in
-            # with a driver rename. Crash window: a crash between a
-            # bucket's remove and its rename can lose that bucket's files,
-            # the SAME non-transactional exposure the plain-parquet
-            # dynamic-partition overwrite already documented (its commit
-            # deletes the old files per partition before the final
-            # rename); recovery for both is the idempotent batch replay.
             self._swap_affected_buckets(versioned, buckets)
         finally:
             if hist is not None:
@@ -1025,42 +962,22 @@ class Scd2ParquetSink:
         self, versioned: DataFrame, buckets: list[int]
     ) -> None:
         """Materialize the merge result ONCE and swap it in (r14,
-        guide §5).
+        guide §5): one write job per batch, partitioned-by-bucket to the
+        staging sibling (:meth:`_stage` — a different path, so no extra
+        materialization pass is needed to cut lineage from the store),
+        then only the affected bucket directories are replaced through
+        :func:`swap_dirs` (local fs / HDFS: O(1) metadata ops per
+        bucket).
 
-        The result is written partitioned-by-bucket to a staging
-        sibling directory — a DIFFERENT path, so Spark's
-        read-and-overwrite restriction never applies — and each
-        affected bucket directory is then swapped into the store with a
-        driver rename (local fs / HDFS: O(1) metadata op per bucket).
-        This replaces the eager ``localCheckpoint`` + dynamic-partition
-        overwrite, which cost one full extra materialization job per
-        micro-batch: checkpoint the merge into block storage, then a
-        second job re-reading the checkpointed blocks to write parquet.
-
-        Crash window: a crash between a bucket's remove and its rename
-        can lose that bucket's files — the SAME non-transactional
-        exposure the plain-parquet dynamic-partition overwrite already
-        documented (its commit likewise deletes each affected
-        partition's old files before renaming in the staged ones);
-        recovery for both is the idempotent batch replay. A fixed
-        staging name keeps a crash-leftover from accumulating: the
-        replay's ``overwrite`` reclaims it."""
-        import shutil
-
-        staging = self.path.rstrip("/") + "_staging"
-        versioned.write.mode("overwrite").partitionBy("bucket").parquet(
-            staging
+        Crash tolerance: a crash at any step of the swap reopens as
+        exactly the pre-merge buckets (any backup's live directory still
+        missing ⇒ every bucket rolls back) or exactly the merged ones;
+        either way the idempotent batch replay converges."""
+        swap_dirs(
+            self.path,
+            self._stage(versioned),
+            [f"bucket={b}" for b in buckets],
         )
-        try:
-            os.makedirs(self.path, exist_ok=True)
-            for b in buckets:
-                new = os.path.join(staging, f"bucket={b}")
-                old = os.path.join(self.path, f"bucket={b}")
-                shutil.rmtree(old, ignore_errors=True)
-                if os.path.isdir(new):
-                    os.rename(new, old)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
 
     def needs_rebuild(self, spark: SparkSession) -> DataFrame:
         """Keys whose history is incomplete: distinct user_ids in the
@@ -1088,8 +1005,6 @@ class Scd2ParquetSink:
         changelogs — the same plan the ``lake_scd2_build`` batch query
         pins — so one code path defines the SCD2 semantics. Unflagged
         users sharing a bucket are carried over untouched."""
-        import shutil
-
         from pyspark.sql import functions as F
 
         self.exists()  # sync n_buckets from meta before bucketing
@@ -1101,10 +1016,7 @@ class Scd2ParquetSink:
             recs = (
                 changelog.select("user_id", "attr", "ts_s", "event_id")
                 .join(F.broadcast(flagged), "user_id", "left_semi")
-                .withColumn(
-                    "bucket",
-                    F.pmod("user_id", F.lit(self.n_buckets)).cast("int"),
-                )
+                .withColumn("bucket", self._bucket_expr())
             )
             buckets = [
                 r.bucket for r in recs.select("bucket").distinct().collect()
@@ -1129,7 +1041,7 @@ class Scd2ParquetSink:
                 F.col("__seen.e").alias("seen_event_id"),
             )
             keep = (
-                self._read_history(spark)
+                self._read_store(spark)
                 .filter(F.col("bucket").isin(buckets))
                 .join(F.broadcast(flagged), "user_id", "left_anti")
             )
@@ -1142,34 +1054,6 @@ class Scd2ParquetSink:
         shutil.rmtree(self.quarantine_path)
         return n
 
-    def resplit(self, spark: SparkSession, n_buckets: int) -> None:
-        """Offline bucket-count evolution — same contract as
-        :meth:`KeyedParquetSink.resplit` (stage to a sibling directory
-        with the meta sidecar written INTO it so the new count travels
-        through the two-rename swap — ADVICE r11, see that method);
-        buckets here are ``pmod(user_id, n)``. Must run with the stream
-        stopped.
-        """
-        import shutil
-
-        from pyspark.sql import functions as F
-
-        if not self.exists():
-            raise RuntimeError(f"no bucketed store at {self.path}")
-        if n_buckets == self.n_buckets:
-            return
-        self.n_buckets = int(n_buckets)
-        df = self._read_history(spark).withColumn(
-            "bucket", F.pmod("user_id", F.lit(self.n_buckets)).cast("int")
-        )
-        staged = self.path.rstrip("/") + f".resplit{n_buckets}"
-        df.write.mode("overwrite").partitionBy("bucket").parquet(staged)
-        with open(os.path.join(staged, self.META_FILE), "w") as f:
-            json.dump({"n_buckets": self.n_buckets}, f)
-        backup = self.path.rstrip("/") + ".resplit_old"
-        os.rename(self.path, backup)
-        os.rename(staged, self.path)
-        shutil.rmtree(backup)
-
     def read(self, spark: SparkSession) -> DataFrame:
-        return self._read_history(spark)
+        self._sync_meta()
+        return self._read_store(spark)

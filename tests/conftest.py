@@ -1,7 +1,10 @@
 from __future__ import annotations
 
+import contextlib
 import os
+import shutil
 import sys
+from unittest import mock
 
 import duckdb
 import pytest
@@ -96,3 +99,74 @@ def normalize(rows, columns):
     out = [tuple(repr(row[i]) for i in idx) for row in rows]
     out.sort()
     return [c for c in sorted(columns)], out
+
+
+# -- directory-swap fault injection --------------------------------------------
+# The steps of ``streaming.sinks.swap_dirs`` at which ``crash_at`` fails. A
+# swap renames every live directory to its ``.<name>.bak`` backup, then every
+# staged directory to live, then deletes the backups, then staging.
+SWAP_STEPS = (
+    "after_backup_rename",
+    "after_staged_rename",
+    "before_backup_delete",
+    "before_staging_removal",
+)
+
+
+@contextlib.contextmanager
+def crash_at(step: str, under: str):
+    """Fail one directory swap under ``under`` once, at ``step``, with an
+    OSError — driver-side patches of ``os.rename`` and ``shutil.rmtree``.
+    When a live directory exists, the swap's first rename is a backup
+    rename, so:
+
+    * ``after_backup_rename``: the 2nd rename fails;
+    * ``after_staged_rename``: the first operation after the first staged
+      rename (one not to a backup) fails;
+    * ``before_backup_delete``: the first delete of a backup fails;
+    * ``before_staging_removal``: the first other delete after a staged
+      rename fails.
+    """
+    real_rename, real_rmtree = os.rename, shutil.rmtree
+    state = {"renames": 0, "staged": False, "fired": False}
+
+    def is_backup(path) -> bool:
+        name = os.path.basename(str(path).rstrip("/"))
+        return name.startswith(".") and name.endswith(".bak")
+
+    def ours(path) -> bool:
+        return not state["fired"] and str(path).startswith(under)
+
+    def fire():
+        state["fired"] = True
+        raise OSError(f"injected crash: {step}")
+
+    def rename(src, dst, *args, **kwargs):
+        if ours(dst):
+            state["renames"] += 1
+            if (step == "after_backup_rename" and state["renames"] == 2) or (
+                step == "after_staged_rename" and state["staged"]
+            ):
+                fire()
+        out = real_rename(src, dst, *args, **kwargs)
+        if ours(dst) and not is_backup(dst):
+            state["staged"] = True
+        return out
+
+    def rmtree(path, *args, **kwargs):
+        if ours(path):
+            backup = is_backup(path)
+            if (
+                (step == "after_staged_rename" and state["staged"])
+                or (step == "before_backup_delete" and backup)
+                or (step == "before_staging_removal" and state["staged"]
+                    and not backup)
+            ):
+                fire()
+        return real_rmtree(path, *args, **kwargs)
+
+    with mock.patch.object(os, "rename", rename), mock.patch.object(
+        shutil, "rmtree", rmtree
+    ):
+        yield
+    assert state["fired"], f"no swap reached {step}"

@@ -181,3 +181,43 @@ def test_diff_plan_never_shuffles_or_broadcasts_the_store(spark, store):
     # and behavior: pruned prev answers the diff exactly — the ALARM slot
     # is already stored with the same state, so the diff is empty
     assert diff.count() == 0
+
+
+def test_failed_actions_write_is_replayed(spark, src_dir, tmp_path, monkeypatch):
+    """The actions write runs before the state upsert: if it fails, the
+    state store has not advanced, so the replayed batch diffs against the
+    old states and emits the transitions. Written the other way round, the
+    replay would find its states already stored and page nothing."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    store = str(tmp_path / "store")
+    hourly = (
+        spark.read.parquet(f"{src_dir}/events.parquet")
+        .groupBy(F.date_trunc("hour", "ts").alias("h"), "event_type")
+        .agg(F.count("*").alias("n"))
+    )
+    sink = AlarmActionSink(store, _TEST_THRESHOLD)
+    real_option = DataFrameWriter.option
+    failed = []
+
+    def option(self, key, value):
+        if key == "path" and value == sink.actions_path and not failed:
+            failed.append(value)
+            raise OSError("injected failure of the actions write")
+        return real_option(self, key, value)
+
+    monkeypatch.setattr(DataFrameWriter, "option", option)
+    with pytest.raises(OSError, match="injected failure"):
+        sink.process_batch(hourly, 0)
+    sink.process_batch(hourly, 0)  # the replayed batch
+    monkeypatch.undo()
+
+    view = {
+        (r.event_type, r.hour, r.action)
+        for r in alarm_actions_view(spark, store).collect()
+    }
+    log = {
+        (r.event_type, r.hour, r.state)
+        for r in emitted_actions(spark, store).collect()
+    }
+    assert failed and len(view) == 3 and view <= log
