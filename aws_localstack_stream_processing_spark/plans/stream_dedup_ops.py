@@ -39,15 +39,15 @@ non-recursive closed form of the streaming process, exactly like
 
 from __future__ import annotations
 
-import os
 import shutil
 import tempfile
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import hashing, text
+from ..streaming.resilience import run_bounded
+from ..streaming.source import cached_stage, replay_stream
 from .dialect import (
     arr_distinct,
     arr_intersect_len,
@@ -170,40 +170,27 @@ GROUP BY in_doc
 
 
 def _staged_doc_batches(sf_dir: str) -> str:
-    """Stage the incoming docs (``_incoming_sql``) as 3 mtime-ordered
-    single-parquet files (batch k = rows with ``b = k``), so the file
-    stream replays them as a deterministic micro-batch sequence
-    (``maxFilesPerTrigger=1`` — the ``staged_cdc_slices`` harness
-    pattern). Keyed by the source file's identity; restages on testdata
-    regeneration."""
-    import duckdb
+    """Stage the incoming docs (``_incoming_sql``) as 3 single-parquet
+    files (batch k = rows with ``b = k``), replayed as a deterministic
+    micro-batch sequence by ``streaming.source.replay_stream`` (the
+    ``staged_cdc_slices`` harness pattern)."""
 
-    base = sf_dir.rstrip("/")
-    tag = os.path.basename(base)
-    st = os.stat(f"{base}/documents.parquet")
-    stage = f"/tmp/slsp_lshdocs_{tag}_{st.st_size}_{st.st_mtime_ns}"
-    marker = os.path.join(stage, "_STAGED")
-    if os.path.exists(marker):
-        return stage
-    shutil.rmtree(stage, ignore_errors=True)
-    os.makedirs(stage, exist_ok=True)
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS "
-        f"SELECT * FROM read_parquet('{base}/documents.parquet')"
-    )
-    mtime = time.time() - 3600
-    for k in range(3):
-        p = f"{stage}/f{k}.parquet"
+    def build(out: str, src: str) -> None:
+        import duckdb
+
+        con = duckdb.connect()
         con.execute(
-            f"COPY (SELECT doc_id, text FROM ({_incoming_sql('duck')}) t "
-            f"WHERE b = {k} ORDER BY doc_id) TO '{p}' (FORMAT PARQUET)"
+            f"CREATE VIEW documents AS SELECT * FROM read_parquet('{src}')"
         )
-        os.utime(p, (mtime + 10 * k, mtime + 10 * k))
-    con.close()
-    with open(marker, "w") as f:
-        f.write("ok")
-    return stage
+        for k in range(3):
+            con.execute(
+                f"COPY (SELECT doc_id, text FROM ({_incoming_sql('duck')}) t "
+                f"WHERE b = {k} ORDER BY doc_id) "
+                f"TO '{out}/f{k}.parquet' (FORMAT PARQUET)"
+            )
+        con.close()
+
+    return cached_stage("lshdocs", sf_dir, "documents", build)
 
 
 def _shingled(df: DataFrame) -> DataFrame:
@@ -239,39 +226,27 @@ def _banded(shing: DataFrame) -> DataFrame:
 
 
 def _seeded_corpus_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per testdata state, content-cached like the CDC
-    staging) the corpus-seeded stores — ``shingles/`` (KeyedParquetSink,
-    doc_id → shingle set) and ``bands/`` (BandIndexSink) — that every run
-    copies fresh: the stream MUTATES its stores, so trials must not share
-    them, but the corpus seeding pass (the expensive part at bench SF)
-    need only ever run once."""
+    """Build (once per testdata state, through the stage cache like the
+    CDC staging) the corpus-seeded stores — ``shingles/``
+    (KeyedParquetSink, doc_id → shingle set) and ``bands/``
+    (BandIndexSink) — that every run copies fresh: the stream MUTATES its
+    stores, so trials must not share them, but the corpus seeding pass
+    (the expensive part at bench SF) need only ever run once."""
     from ..streaming.sinks import BandIndexSink, KeyedParquetSink
 
-    base = sf_dir.rstrip("/")
-    tag = os.path.basename(base)
-    st = os.stat(f"{base}/documents.parquet")
-    cache = f"/tmp/slsp_lshidx_{tag}_{st.st_size}_{st.st_mtime_ns}"
-    marker = os.path.join(cache, "_SEEDED")
-    if os.path.exists(marker):
-        return cache
-    shutil.rmtree(cache, ignore_errors=True)
-    staging = cache + ".build"
-    shutil.rmtree(staging, ignore_errors=True)
-    os.makedirs(staging, exist_ok=True)
-    views(spark, sf_dir, "documents")
-    csh = _shingled(spark.sql(_corpus_sql("spark"))).localCheckpoint(
-        eager=True
-    )  # one shingle pass feeds both stores
-    KeyedParquetSink(
-        f"{staging}/shingles", "doc_id", n_buckets=_N_STORE_BUCKETS
-    ).upsert_batch(csh, 0)
-    BandIndexSink(
-        f"{staging}/bands", n_buckets=_N_STORE_BUCKETS
-    ).append_batch(_banded(csh))
-    os.rename(staging, cache)
-    with open(marker, "w") as f:
-        f.write("ok")
-    return cache
+    def build(out: str, src: str) -> None:
+        views(spark, sf_dir, "documents")
+        csh = _shingled(spark.sql(_corpus_sql("spark"))).localCheckpoint(
+            eager=True
+        )  # one shingle pass feeds both stores
+        KeyedParquetSink(
+            f"{out}/shingles", "doc_id", n_buckets=_N_STORE_BUCKETS
+        ).upsert_batch(csh, 0)
+        BandIndexSink(
+            f"{out}/bands", n_buckets=_N_STORE_BUCKETS
+        ).append_batch(_banded(csh))
+
+    return cached_stage("lshidx", sf_dir, "documents", build)
 
 
 def make_gate(shstore, bstore, matches_path: str):
@@ -443,10 +418,7 @@ def stream_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     scales with the ARRIVAL rate, not corpus size; store bucket counts
     evolve offline (``resplit``) as the corpus grows."""
     from ..session import apply_runtime_confs
-    from ..streaming.planlog import note_plan
-    from ..streaming.resilience import start_and_await
     from ..streaming.sinks import BandIndexSink, KeyedParquetSink
-    from ..streaming.statestore import apply_state_store
 
     apply_runtime_confs(spark)
     src = _staged_doc_batches(sf_dir)
@@ -461,27 +433,17 @@ def stream_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches_path = f"{work}/matches"
     _gate = make_gate(shstore, bstore, matches_path)
 
-    schema = spark.read.parquet(f"{src}/f0.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    apply_state_store(spark)
+    stream = replay_stream(spark, src)
     # 4 shuffle partitions: the _to_memory harness discipline — per-batch
     # fixed store-IO costs dominate data parallelism at harness volume
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = start_and_await(
-            lambda: stream.writeStream.foreachBatch(_gate)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    note_plan(q)
+    run_bounded(
+        spark,
+        lambda: stream.writeStream.foreachBatch(_gate)
+        .option("checkpointLocation", f"{work}/ckpt")
+        .trigger(availableNow=True)
+        .start(),
+        shuffle_partitions=4,
+    )
     return (
         spark.read.parquet(matches_path)
         .groupBy("in_doc")

@@ -15,7 +15,18 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..streaming.keyring import lru_keyring_assign
-from ..streaming.source import events_stream
+from ..streaming.resilience import run_bounded
+from ..streaming.source import (
+    cached_stage,
+    events_stream,
+    replay_stream,
+    staged_cdc_slices,
+    staged_cdc_slices_ooo,
+    staged_event_batches,
+    staged_join_sides,
+    staged_redelivery_batches,
+    staged_triple_sides,
+)
 from .dialect import inline_values, tbl, ts_str, ts_str_us
 from .reference_ops import (
     _alarm_sql,
@@ -23,15 +34,6 @@ from .reference_ops import (
     _minute_sum_sql,
 )
 from .registry import query
-
-
-# Streaming plan capture for the registry-wide streaming lint — see
-# ..streaming.planlog (batch queries can be plan-inspected lazily, but a
-# streaming plan only exists while its query runs).
-from ..streaming.planlog import note_plan as _note_plan
-from ..streaming.resilience import start_and_await as _start_and_await
-from ..streaming.statelog import note_state_metrics as _note_state
-from ..streaming.statestore import apply_state_store as _apply_state_store
 
 
 def _to_memory(df: DataFrame, mode: str) -> DataFrame:
@@ -42,37 +44,28 @@ def _to_memory(df: DataFrame, mode: str) -> DataFrame:
     with a small state partition count — at a real deployment's volume the
     same queries run with the session default (state scale-out), this knob
     only trims fixed overhead for the bounded verification streams."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    names: list[str] = []
+
+    def _start():
+        # fresh memory-sink table per attempt: a spawn-flake retry
+        # (resilience.start_and_await) must not collide with the
+        # dead attempt's registered sink name
+        names.append(f"slsp_mem_{uuid.uuid4().hex[:12]}")
+        return (
+            df.writeStream.format("memory")
+            .queryName(names[-1])
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+
     # 4 (r8, was 8): state-store instances per micro-batch = shuffle
     # partitions × stateful operators; at harness volume the per-store
     # open/commit fixed cost dominates data parallelism (A/B at sf0.1:
     # join-boundary 8→4 parts ≈ −1 s, 2 parts is WORSE — data plane
     # starves). Results are partition-invariant (oracle-checked).
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    _apply_state_store(spark)
-    try:
-        names: list[str] = []
-
-        def _start():
-            # fresh memory-sink table per attempt: a spawn-flake retry
-            # (resilience.start_and_await) must not collide with the
-            # dead attempt's registered sink name
-            names.append(f"slsp_mem_{uuid.uuid4().hex[:12]}")
-            return (
-                df.writeStream.format("memory")
-                .queryName(names[-1])
-                .outputMode(mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-
-        q = _start_and_await(_start)
-        _note_plan(q)
-        _note_state(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(names[-1])
+    run_bounded(df.sparkSession, _start, shuffle_partitions=4)
+    return df.sparkSession.table(names[-1])
 
 
 @query("stream_minute_sum", oracle=_minute_sum_sql("duck"), tags=("streaming", "agg"))
@@ -488,11 +481,7 @@ def stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_dir = f"{work}/src"
     ev = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
     ev.repartition(4).write.mode("overwrite").parquet(src_dir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
+    stream = replay_stream(spark, src_dir)
     if dict(ev.dtypes)["ts"] == "bigint":
         stream = stream.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
     run_mv_stream(spark, stream, f"{work}/mv", f"{work}/ckpt")
@@ -741,47 +730,24 @@ def stream_manifest_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. This pins the whole manifest loop: commit-keyed publication,
     notification-log planning, offset-ranged parallel read.
 
-    The ingest stage is content-cached like the other staged harness
-    inputs (keyed by the source file's size+mtime_ns — r8, VERDICT #6):
-    the publish protocol is exercised on the first build per content
-    state (and every run of tests/test_manifest_source.py and the e2e
-    test), while repeat trials time what this query prices at scale —
-    the manifest-planned READ path."""
-    import os
-
+    The ingest stage goes through the stage cache like the other staged
+    harness inputs (``streaming.source.cached_stage``, keyed by the source
+    file's size+mtime_ns): the publish protocol is exercised on the first
+    build per content state (and every run of
+    tests/test_manifest_source.py and the e2e test), while repeat trials
+    time what this query prices at scale — the manifest-planned READ
+    path."""
     from ..session import apply_runtime_confs
     from ..sources.manifest_datasource import register_manifest_source
     from ..streaming.jobs import run_ingest_stream_manifest
 
-    apply_runtime_confs(spark)
-    base = sf_dir.rstrip("/")
-    st = os.stat(f"{base}/events.parquet")
-    work = (
-        f"/tmp/slsp_mlake_stage_{os.path.basename(base)}_"
-        f"{st.st_size}_{st.st_mtime_ns}"
-    )
-    src_dir = f"{work}/src"
-    lake = f"{work}/lake"
-    ev = spark.read.parquet(f"{base}/events.parquet")
-    if not os.path.exists(f"{work}/_STAGED"):
-        # A previous run that died between the checkpointed ingest and
-        # the _STAGED marker leaves a poisoned cache: its checkpoint
-        # would resume over freshly re-written (differently named) part
-        # files and duplicate lake rows, and the size+mtime cache key
-        # never changes so the corruption is sticky. Absent marker ⇒
-        # rebuild from a clean slate (ADVICE r8).
-        import shutil
+    def build(out: str, src: str) -> None:
+        spark.read.parquet(src).repartition(4).write.parquet(f"{out}/src")
+        stream = replay_stream(spark, f"{out}/src")
+        run_ingest_stream_manifest(spark, stream, f"{out}/lake", f"{out}/ckpt")
 
-        shutil.rmtree(work, ignore_errors=True)
-        ev.repartition(4).write.mode("overwrite").parquet(src_dir)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        run_ingest_stream_manifest(spark, stream, lake, f"{work}/ckpt")
-        with open(f"{work}/_STAGED", "w") as fh:
-            fh.write("ok")
+    apply_runtime_confs(spark)
+    lake = f"{cached_stage('mlake', sf_dir, 'events', build)}/lake"
     register_manifest_source(spark)
     lake_rows = (
         spark.readStream.format("manifest_lake")
@@ -847,22 +813,16 @@ def stream_alarm_actions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count("*").alias("n"))
     store = tempfile.mkdtemp(prefix="slsp_alarm_store_")
     sink = AlarmActionSink(store, _ALARM_THRESHOLD)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    _apply_state_store(spark)
-    try:
-        ckpt = tempfile.mkdtemp(prefix="slsp_alarm_ckpt_")
-        q = _start_and_await(
-            lambda: hourly.writeStream.foreachBatch(sink.process_batch)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _note_plan(q)
-        _note_state(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    ckpt = tempfile.mkdtemp(prefix="slsp_alarm_ckpt_")
+    run_bounded(
+        spark,
+        lambda: hourly.writeStream.foreachBatch(sink.process_batch)
+        .outputMode("complete")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start(),
+        shuffle_partitions=8,
+    )
     return alarm_actions_view(spark, store)
 
 
@@ -916,30 +876,18 @@ def stream_kv_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     redelivery duplication (id % 5 slice delivered twice via
     array_repeat+explode on one source pass, r8) is baked into the
     staged records."""
-    import os
     import tempfile
 
+    from ..sources.firehose_datasource import register_firehose_source
     from ..sources.kv_sink_datasource import read_kv_table, register_kv_sink
 
     register_kv_sink(spark)
-    base = sf_dir.rstrip("/")
-    st = os.stat(f"{base}/events.parquet")
-    work = (
-        f"/tmp/slsp_kvstage_{os.path.basename(base)}_"
-        f"{st.st_size}_{st.st_mtime_ns}"
-    )
-    if not os.path.exists(f"{work}/_STAGED"):
-        import shutil
 
-        from ..sources.firehose_datasource import register_firehose_source
-
-        # absent marker => rebuild from a clean slate (a run that died
-        # mid-stage must not leave a half-written source dir behind)
-        shutil.rmtree(work, ignore_errors=True)
+    def build(out: str, events_path: str) -> None:
         register_firehose_source(spark)
         src = (
             spark.read.format("firehose_sim")
-            .option("path", f"{base}/events.parquet")
+            .option("path", events_path)
             .option("numPartitions", "8")
             .load()
         )
@@ -970,23 +918,21 @@ def stream_kv_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         decoded.select(
             F.sha2(canon, 256).alias("key"), "event_type"
-        ).repartition(4).write.mode("overwrite").parquet(f"{work}/src")
-        with open(f"{work}/_STAGED", "w") as fh:
-            fh.write("ok")
-    keyed_schema = spark.read.parquet(f"{work}/src").schema
-    keyed = spark.readStream.schema(keyed_schema).parquet(f"{work}/src")
+        ).repartition(4).write.parquet(f"{out}/src")
+
+    src_dir = f"{cached_stage('kv', sf_dir, 'events', build)}/src"
+    keyed_schema = spark.read.parquet(src_dir).schema
+    keyed = spark.readStream.schema(keyed_schema).parquet(src_dir)
     store = tempfile.mkdtemp(prefix="slsp_kv_store_")
-    _apply_state_store(spark)
     ckpt = tempfile.mkdtemp(prefix="slsp_kv_ckpt_")
-    q = _start_and_await(
+    run_bounded(
+        spark,
         lambda: keyed.writeStream.format("kv_upsert")
         .option("path", store)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
-        .start()
+        .start(),
     )
-    _note_plan(q)
-    _note_state(q)
     back = read_kv_table(spark, store, "key")
     return back.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("n_signed")
@@ -1064,18 +1010,8 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows past the final watermark never emit. At scale the staging is
     the lake itself (files ARE micro-batches); state is bounded by
     delay × window-rate, the exact knob this query demonstrates."""
-    from ..session import apply_runtime_confs
-    from ..streaming.source import staged_event_batches
-
-    apply_runtime_confs(spark)
     stage = staged_event_batches(sf_dir, _LATE_BATCHES)
-    schema = spark.read.parquet(f"{stage}/b0.parquet").schema
-    ev = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
+    ev = replay_stream(spark, stage).withColumn("ts", F.col("ts").cast("timestamp"))
     agg = (
         ev.withWatermark("ts", f"{_LATE_DELAY_DAYS} days")
         .groupBy(F.window("ts", "1 day").alias("w"))
@@ -1148,18 +1084,8 @@ def stream_dedup_ttl_boundary(spark: SparkSession, sf_dir: str) -> DataFrame:
     see :func:`_dedup_ttl_sql`), and too-late non-duplicates are the
     price of the TTL. Per-type emitted counts must equal the closed-form
     oracle; verified at all three SFs."""
-    from ..session import apply_runtime_confs
-    from ..streaming.source import staged_redelivery_batches
-
-    apply_runtime_confs(spark)
     stage = staged_redelivery_batches(sf_dir, _TTL_BATCHES)
-    schema = spark.read.parquet(f"{stage}/b0.parquet").schema
-    ev = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
+    ev = replay_stream(spark, stage).withColumn("ts", F.col("ts").cast("timestamp"))
     deduped = ev.withWatermark("ts", f"{_TTL_DELAY_DAYS} days").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
@@ -1252,24 +1178,14 @@ def stream_join_state_boundary(spark: SparkSession, sf_dir: str) -> DataFrame:
     once gap every streaming join ships with and almost no harness can
     measure. At scale the buffer is bounded by delay + range width per
     side — the knob this query prices exactly."""
-    from ..session import apply_runtime_confs
-    from ..streaming.source import staged_join_sides
-
-    apply_runtime_confs(spark)
     left_dir, right_dir = staged_join_sides(sf_dir)
-    ls = spark.read.parquet(f"{left_dir}/f0.parquet").schema
-    rs = spark.read.parquet(f"{right_dir}/f0.parquet").schema
     lev = (
-        spark.readStream.schema(ls)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(left_dir)
+        replay_stream(spark, left_dir)
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", "1 hour")
     )
     rev = (
-        spark.readStream.schema(rs)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(right_dir)
+        replay_stream(spark, right_dir)
         .withColumn("rts", F.col("rts").cast("timestamp"))
         .withColumnRenamed("event_id", "rid")
         .withWatermark("rts", "1 hour")
@@ -1396,18 +1312,8 @@ def stream_chained_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the E2->A1 production topology: one checkpoint, one
     shuffle per stateful boundary, state bounded by delay x arrival rate
     (dedup) plus delay x window-rate (agg)."""
-    from ..session import apply_runtime_confs
-    from ..streaming.source import staged_redelivery_batches
-
-    apply_runtime_confs(spark)
     stage = staged_redelivery_batches(sf_dir, _CHAIN_BATCHES)
-    schema = spark.read.parquet(f"{stage}/b0.parquet").schema
-    ev = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
+    ev = replay_stream(spark, stage).withColumn("ts", F.col("ts").cast("timestamp"))
     chained = (
         ev.withWatermark("ts", f"{_CHAIN_DELAY_DAYS} days")
         .dropDuplicatesWithinWatermark(["event_id"])
@@ -1530,24 +1436,14 @@ def stream_chained_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark). At 100 TB: two stateful boundaries, each state bounded —
     join buffer by delay + range width, agg state by (delay + range
     width) x window rate."""
-    from ..session import apply_runtime_confs
-    from ..streaming.source import staged_join_sides
-
-    apply_runtime_confs(spark)
     left_dir, right_dir = staged_join_sides(sf_dir)
-    ls = spark.read.parquet(f"{left_dir}/f0.parquet").schema
-    rs = spark.read.parquet(f"{right_dir}/f0.parquet").schema
     lev = (
-        spark.readStream.schema(ls)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(left_dir)
+        replay_stream(spark, left_dir)
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", "1 hour")
     )
     rev = (
-        spark.readStream.schema(rs)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(right_dir)
+        replay_stream(spark, right_dir)
         .withColumn("rts", F.col("rts").cast("timestamp"))
         .withColumnRenamed("event_id", "rid")
         .withWatermark("rts", "1 hour")
@@ -1704,25 +1600,15 @@ def stream_triple_stateful_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's docstring). At 100 TB: three stateful boundaries, one
     shuffle each, state bounded by delay×arrival (dedup), delay+range
     width (join buffer), and (delay+range)×window rate (agg)."""
-    from ..session import apply_runtime_confs
-    from ..streaming.source import staged_triple_sides
-
-    apply_runtime_confs(spark)
     left_dir, right_dir = staged_triple_sides(sf_dir)
-    ls = spark.read.parquet(f"{left_dir}/f0.parquet").schema
-    rs = spark.read.parquet(f"{right_dir}/f0.parquet").schema
     lev = (
-        spark.readStream.schema(ls)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(left_dir)
+        replay_stream(spark, left_dir)
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", "1 day")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
     rev = (
-        spark.readStream.schema(rs)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(right_dir)
+        replay_stream(spark, right_dir)
         .withColumn("rts", F.col("rts").cast("timestamp"))
         .withColumnRenamed("event_id", "rid")
         .withWatermark("rts", "1 day")
@@ -1795,40 +1681,25 @@ def stream_cdc_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key in-order delivery a binlog CDC source provides."""
     import tempfile
 
-    from ..session import apply_runtime_confs
     from ..streaming.sinks import Scd2ParquetSink
-    from ..streaming.source import staged_cdc_slices
 
-    apply_runtime_confs(spark)
-    src = staged_cdc_slices(sf_dir)
-    schema = spark.read.parquet(f"{src}/f0.parquet").schema
+    stream = replay_stream(spark, staged_cdc_slices(sf_dir))
     work = tempfile.mkdtemp(prefix="slsp_scd2_")
     sink = Scd2ParquetSink(f"{work}/history")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    _apply_state_store(spark)
     # the merge's window/dedup exchanges run over one ~n/6-row slice per
     # batch: 4 shuffle partitions, the _to_memory discipline (A/B at
     # sf0.1 min-of-3: 32 parts 3.72 s, 8 parts 3.38, 4 parts 3.08 — the
     # per-partition fixed cost of 6 batches × {distinct, window,
     # localCheckpoint, overwrite} dominates data parallelism at harness
     # volume; a real deployment keeps the session default)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = _start_and_await(
-            lambda: stream.writeStream.foreachBatch(sink.merge_batch)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    _note_plan(q)
-    _note_state(q)
+    run_bounded(
+        spark,
+        lambda: stream.writeStream.foreachBatch(sink.merge_batch)
+        .option("checkpointLocation", f"{work}/ckpt")
+        .trigger(availableNow=True)
+        .start(),
+        shuffle_partitions=4,
+    )
     return sink.read(spark).select(
         "user_id",
         "attr",
@@ -1915,34 +1786,19 @@ def stream_cdc_scd2_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import tempfile
 
-    from ..session import apply_runtime_confs
     from ..streaming.sinks import Scd2ParquetSink
-    from ..streaming.source import staged_cdc_slices_ooo
 
-    apply_runtime_confs(spark)
-    src = staged_cdc_slices_ooo(sf_dir)
-    schema = spark.read.parquet(f"{src}/f0.parquet").schema
+    stream = replay_stream(spark, staged_cdc_slices_ooo(sf_dir))
     work = tempfile.mkdtemp(prefix="slsp_scd2ooo_")
     sink = Scd2ParquetSink(f"{work}/history")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    run_bounded(
+        spark,
+        lambda: stream.writeStream.foreachBatch(sink.merge_batch)
+        .option("checkpointLocation", f"{work}/ckpt")
+        .trigger(availableNow=True)
+        .start(),
+        shuffle_partitions=4,
     )
-    _apply_state_store(spark)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = _start_and_await(
-            lambda: stream.writeStream.foreachBatch(sink.merge_batch)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    _note_plan(q)
-    _note_state(q)
     if glob.glob(f"{sink.quarantine_path}/batch_id=*"):
         return spark.read.parquet(sink.quarantine_path).select(
             "user_id", "attr", "ts_s", "event_id", "reason"

@@ -72,10 +72,10 @@ class _RangePartition(InputPartition):
         self.end = end
 
 
-def _source_path(options: dict) -> str:
+def _source_path(options: dict, fmt: str) -> str:
     path = options.get("path")
     if not path:
-        raise ValueError("firehose_sim: the 'path' option is required")
+        raise ValueError(f"{fmt}: the 'path' option is required")
     return path
 
 
@@ -146,6 +146,27 @@ def _split(start: int, end: int, n: int) -> list[_RangePartition]:
     ]
 
 
+def _read_range(path: str, lo: int, hi: int):
+    """Rows [lo, hi) of one parquet file as an Arrow table, reading only
+    the row groups that overlap the range; None when none does."""
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(path)
+    groups: list[int] = []
+    first_off = 0
+    off = 0
+    for i in range(pf.metadata.num_row_groups):
+        n = pf.metadata.row_group(i).num_rows
+        if off < hi and off + n > lo:
+            if not groups:
+                first_off = off
+            groups.append(i)
+        off += n
+    if not groups:
+        return None
+    return pf.read_row_groups(groups).slice(lo - first_off, hi - lo)
+
+
 def _b64_series(payload) -> "object":
     """Vectorized base64 of a string Series — no per-row Python.
 
@@ -194,23 +215,10 @@ def _read_file_rows(path: str, file_off: int, start: int, end: int) -> Iterator:
     columnar end-to-end (vectorized string ops + bulk numpy base64)."""
     import pandas as pd
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    pf = pq.ParquetFile(path)
-    lo, hi = start - file_off, end - file_off  # local row range
-    groups: list[int] = []
-    first_off = 0
-    off = 0
-    for i in range(pf.metadata.num_row_groups):
-        n = pf.metadata.row_group(i).num_rows
-        if off < hi and off + n > lo:
-            if not groups:
-                first_off = off
-            groups.append(i)
-        off += n
-    if not groups:
+    table = _read_range(path, start - file_off, end - file_off)
+    if table is None:
         return
-    table = pf.read_row_groups(groups).slice(lo - first_off, hi - lo)
     df = table.to_pandas()
     ts = pd.to_datetime(df["ts"]) if "ts" in df else pd.Series([pd.NaT] * len(df))
     # canonical JSON (sorted keys, no whitespace), built columnar — same
@@ -269,7 +277,7 @@ def _read_rows(path: str, start: int, end: int) -> Iterator:
 
 class _FirehoseBatchReader(DataSourceReader):
     def __init__(self, options: dict):
-        self._path = _source_path(options)
+        self._path = _source_path(options, "firehose_sim")
         self._parts = int(options.get("numpartitions", 8))
 
     def partitions(self) -> list[InputPartition]:
@@ -285,7 +293,7 @@ class _FirehoseStreamReader(DataSourceStreamReader):
     reader state, so checkpoint restart replays identical ranges."""
 
     def __init__(self, options: dict):
-        self._path = _source_path(options)
+        self._path = _source_path(options, "firehose_sim")
         self._parts = int(options.get("numpartitions", 8))
 
     def initialOffset(self) -> dict:

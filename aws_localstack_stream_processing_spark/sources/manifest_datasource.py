@@ -42,7 +42,12 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from .firehose_datasource import _RangePartition, _split
+from .firehose_datasource import (
+    _RangePartition,
+    _read_range,
+    _source_path,
+    _split,
+)
 
 _MANIFEST_DIR = "_manifest"
 
@@ -181,45 +186,20 @@ def read_manifest(lake_dir: str) -> list[tuple[str, int, int]]:
     return plan
 
 
-def _read_span(path: str, lo: int, hi: int) -> Iterator:
-    """Arrow batches for local row range [lo, hi) of one file — only the
-    overlapping row groups are read (same pruning shape as the firehose
-    source, without the DirectPut envelope)."""
-    import pyarrow.parquet as pq
-
-    pf = pq.ParquetFile(path)
-    groups: list[int] = []
-    first_off = 0
-    off = 0
-    for i in range(pf.metadata.num_row_groups):
-        n = pf.metadata.row_group(i).num_rows
-        if off < hi and off + n > lo:
-            if not groups:
-                first_off = off
-            groups.append(i)
-        off += n
-    if not groups:
-        return
-    table = pf.read_row_groups(groups).slice(lo - first_off, hi - lo)
-    yield from table.to_batches()
-
-
 def _read_rows(lake_dir: str, start: int, end: int) -> Iterator:
+    """Arrow batches for global rows [start, end): only the overlapping
+    row groups of the overlapping files are read (the firehose source's
+    pruning, without the DirectPut envelope)."""
     for f, off, n in read_manifest(lake_dir):
         if off < end and off + n > start:
-            yield from _read_span(f, max(start, off) - off, min(end, off + n) - off)
-
-
-def _source_path(options: dict) -> str:
-    path = options.get("path")
-    if not path:
-        raise ValueError("manifest_lake: the 'path' option is required")
-    return path
+            table = _read_range(f, max(start, off) - off, min(end, off + n) - off)
+            if table is not None:
+                yield from table.to_batches()
 
 
 class _ManifestBatchReader(DataSourceReader):
     def __init__(self, options: dict):
-        self._path = _source_path(options)
+        self._path = _source_path(options, "manifest_lake")
         self._parts = int(options.get("numpartitions", 8))
 
     def partitions(self) -> list[InputPartition]:
@@ -236,7 +216,7 @@ class _ManifestStreamReader(DataSourceStreamReader):
     add rows after commit n's, wherever its files' names sort."""
 
     def __init__(self, options: dict):
-        self._path = _source_path(options)
+        self._path = _source_path(options, "manifest_lake")
         self._parts = int(options.get("numpartitions", 8))
 
     def initialOffset(self) -> dict:
@@ -270,7 +250,7 @@ class ManifestLakeDataSource(DataSource):
         from pyspark.sql.pandas.types import from_arrow_schema
         import pyarrow.parquet as pq
 
-        plan = read_manifest(_source_path(self.options))
+        plan = read_manifest(_source_path(self.options, "manifest_lake"))
         if not plan:
             raise ValueError(
                 "manifest_lake: empty or missing manifest — write data with "

@@ -18,8 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .resilience import start_and_await
-from .statestore import apply_state_store
+from .resilience import run_bounded
 
 
 def run_mv_stream(
@@ -37,18 +36,13 @@ def run_mv_stream(
         )
         partial.write.mode("overwrite").parquet(f"{mv_dir}/batch_id={batch_id}")
 
-    apply_state_store(spark)
-    q = start_and_await(
+    run_bounded(
+        spark,
         lambda: source.writeStream.foreachBatch(handle)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
-        .start()
+        .start(),
     )
-    from .planlog import note_plan
-    from .statelog import note_state_metrics
-
-    note_plan(q)
-    note_state_metrics(q)
 
 
 def read_mv(spark: SparkSession, mv_dir: str) -> DataFrame:

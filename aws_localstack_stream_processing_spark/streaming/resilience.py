@@ -10,7 +10,8 @@ Two layers of defense:
    (the accept timeout the connect-back wait uses, default 15s) so a slow
    worker fork under CPU steal gets time to arrive at all.
 2. :func:`start_and_await` — every bounded ``start(); awaitTermination()``
-   site in the package goes through it — retries the WHOLE query a bounded
+   site in the package goes through it, most of them via
+   :func:`run_bounded` — retries the WHOLE query a bounded
    number of times, but only when the failure is (a) the worker-spawn class
    and (b) apparently pre-data: nothing in the commit log and no completed
    batch in the query's progress.
@@ -42,6 +43,10 @@ completed. Either channel suffices; both absent → re-raise.
 from __future__ import annotations
 
 from typing import Callable
+
+from .planlog import note_plan
+from .statelog import note_state_metrics
+from .statestore import apply_state_store
 
 _SPAWN_MARKERS = (
     "Python worker failed to connect back",
@@ -93,3 +98,22 @@ def start_and_await(start: Callable, retries: int = 2):
                 continue
             raise
     raise AssertionError("unreachable")  # pragma: no cover
+
+
+def run_bounded(spark, start: Callable, shuffle_partitions: int | None = None):
+    """Run one bounded streaming query to completion and record it: pin
+    ``spark.sql.shuffle.partitions`` to ``shuffle_partitions`` for the run
+    when given (restored afterwards), select the state store, run
+    :func:`start_and_await`, then record the executed plan and the
+    per-batch state curve (``planlog``, ``statelog``). Returns the query."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    if shuffle_partitions:
+        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    try:
+        apply_state_store(spark)
+        q = start_and_await(start)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    note_plan(q)
+    note_state_metrics(q)
+    return q

@@ -8,9 +8,30 @@ checkpointed exactly-once — no queue, no visibility timeouts.
 For the correctness harness the driver's ``events`` parquet is treated as an
 append-only stream (one file = one micro-batch; ``maxFilesPerTrigger``
 reproduces the reference's batch-size knob, app.ts:46).
+
+Replay contract for staged inputs. Queries that pin behaviour under
+redelivery and arrival order replay a *stage*: a directory of parquet files
+written once from a source table (:func:`cached_stage`) and read one file per
+micro-batch (:func:`replay_stream`).
+
+- Arrival order is file-name order: :func:`_stamp_arrival_order` gives the
+  files of every stage directory strictly increasing modification times in
+  file-name order, and the file-stream source lists by modification time.
+- A stage is keyed by its source's identity: stage name, the sf dir's
+  basename, the source table's size and ``mtime_ns``, and the builder's
+  parameters. Regenerated testdata gets a new stage, never a stale one.
+- A stage is published by one ``os.rename`` of a fully built sibling
+  directory under ``tempfile.gettempdir()``, so an existing stage
+  directory is complete; a crash at any step leaves no stage at all.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
+import tempfile
+import time
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,95 +68,121 @@ def events_stream(
     return df
 
 
-def lake_stream(spark: SparkSession, lake_dir: str, schema) -> DataFrame:
-    """File-stream over a partitioned lake directory — the replay source
-    (SURVEY §2.6 T8): re-running a batch query over ``raw/`` IS replay."""
+def replay_stream(spark: SparkSession, stage_dir: str) -> DataFrame:
+    """The replay reader: ``stage_dir``'s parquet files as a file stream
+    with one file per micro-batch, in arrival (= file-name) order, read
+    with the first file's schema."""
     apply_runtime_confs(spark)
-    return spark.readStream.schema(schema).parquet(lake_dir)
+    first = min(
+        f
+        for f in os.listdir(stage_dir)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+    schema = spark.read.parquet(os.path.join(stage_dir, first)).schema
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stage_dir)
+    )
+
+
+def _stamp_arrival_order(root: str) -> None:
+    """In every directory under ``root``, give the files strictly
+    increasing modification times (10 s apart, an hour back) in file-name
+    order — the order the file-stream source then lists them in."""
+    t0 = time.time() - 3600
+    for d, _, files in os.walk(root):
+        for k, f in enumerate(sorted(files)):
+            os.utime(os.path.join(d, f), (t0 + 10 * k, t0 + 10 * k))
+
+
+def cached_stage(
+    name: str,
+    sf_dir: str,
+    table: str,
+    build: Callable[[str, str], None],
+    *params,
+) -> str:
+    """The stage directory of ``name`` over ``<sf_dir>/<table>.parquet``.
+
+    Built on first use by ``build(out_dir, source_path)`` in a unique
+    sibling directory, stamped (:func:`_stamp_arrival_order`) and published
+    by one ``os.rename``; later calls return it without building. A build
+    that raises leaves nothing behind. Two processes racing on one key
+    both build, one rename wins, and both return the winner's stage."""
+    base = sf_dir.rstrip("/")
+    src = f"{base}/{table}.parquet"
+    st = os.stat(src)
+    key = "_".join(
+        str(p)
+        for p in (name, os.path.basename(base), st.st_size, st.st_mtime_ns, *params)
+    )
+    final = os.path.join(tempfile.gettempdir(), f"slsp_stage_{key}")
+    if os.path.isdir(final):
+        return final
+    work = tempfile.mkdtemp(prefix=f".slsp_stage_{key}.", dir=os.path.dirname(final))
+    try:
+        build(work, src)
+        _stamp_arrival_order(work)
+        try:
+            os.rename(work, final)
+        except OSError:
+            if not os.path.isdir(final):
+                raise
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    return final
+
+
+def _duck_copy(con, select: str, path: str) -> None:
+    con.execute(f"COPY ({select}) TO '{path}' (FORMAT PARQUET)")
 
 
 def staged_event_batches(sf_dir: str, n_batches: int = 3) -> str:
     """Stage the ``events`` table as ``n_batches`` single-parquet files
-    (batch k = rows with ``event_id % n_batches = k``) with strictly
-    increasing modification times, so the file-stream source replays them
-    as a DETERMINISTIC micro-batch sequence (``maxFilesPerTrigger=1``).
+    (batch k = rows with ``event_id % n_batches = k``), replayed as a
+    DETERMINISTIC micro-batch sequence by :func:`replay_stream`.
 
     This is the harness for exact late-data semantics: because batch
     membership and arrival order are pure functions of ``event_id``, the
     watermark trajectory — and therefore the exact set of dropped late
     rows — is deterministic and SQL-expressible (see
-    ``stream_watermark_late_drop``). Staged once per (sf, n) under /tmp
-    and reused; the marker file commits the staging atomically."""
-    import os
-    import time
+    ``stream_watermark_late_drop``)."""
 
-    import numpy as np  # noqa: F401  (imported for the mask dtype)
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    def build(out: str, src: str) -> None:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-    base = sf_dir.rstrip("/")
-    tag = os.path.basename(base)
-    # key the stage by the SOURCE file's identity (size + mtime): if the
-    # driver regenerates the testdata, a stale staged copy would silently
-    # diverge from the oracle's view of the same table
-    st = os.stat(f"{base}/events.parquet")
-    fp = f"{st.st_size}_{st.st_mtime_ns}"
-    stage = f"/tmp/slsp_late_stage_{tag}_{fp}_{n_batches}"
-    marker = os.path.join(stage, "_STAGED")
-    if os.path.exists(marker):
-        return stage
-    os.makedirs(stage, exist_ok=True)
-    t = pq.read_table(f"{base}/events.parquet")
-    ids = t["event_id"].to_numpy()
-    mtime = time.time() - 3600
-    for k in range(n_batches):
-        path = os.path.join(stage, f"b{k}.parquet")
-        pq.write_table(t.filter(pa.array(ids % n_batches == k)), path)
-        # arrival order = batch index: the file source lists by mtime
-        os.utime(path, (mtime + 10 * k, mtime + 10 * k))
-    with open(marker, "w") as f:
-        f.write("ok")
-    return stage
+        t = pq.read_table(src)
+        ids = t["event_id"].to_numpy()
+        for k in range(n_batches):
+            mask = pa.array(ids % n_batches == k)
+            pq.write_table(t.filter(mask), f"{out}/b{k}.parquet")
+
+    return cached_stage("late", sf_dir, "events", build, n_batches)
 
 
 def staged_redelivery_batches(sf_dir: str, n_batches: int = 6) -> str:
-    """Stage ``events`` as ``n_batches`` mtime-ordered files (batch k =
+    """Stage ``events`` as ``n_batches`` files (batch k =
     ``event_id % n_batches = k``) where the LAST file additionally
     redelivers batch 0's ``event_id % 5 = 0`` slice — an at-least-once
     delivery whose duplicate copies arrive many batches (and several
     watermark advances) after their originals. Harness for the
     TTL-bounded dedup boundary (``stream_dedup_ttl_boundary``)."""
-    import os
-    import time
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    def build(out: str, src: str) -> None:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-    base = sf_dir.rstrip("/")
-    tag = os.path.basename(base)
-    # key the stage by the SOURCE file's identity (size + mtime): if the
-    # driver regenerates the testdata, a stale staged copy would silently
-    # diverge from the oracle's view of the same table
-    st = os.stat(f"{base}/events.parquet")
-    fp = f"{st.st_size}_{st.st_mtime_ns}"
-    stage = f"/tmp/slsp_redeliv_stage_{tag}_{fp}_{n_batches}"
-    marker = os.path.join(stage, "_STAGED")
-    if os.path.exists(marker):
-        return stage
-    os.makedirs(stage, exist_ok=True)
-    t = pq.read_table(f"{base}/events.parquet")
-    ids = t["event_id"].to_numpy()
-    mtime = time.time() - 3600
-    for k in range(n_batches):
-        mask = ids % n_batches == k
-        if k == n_batches - 1:
-            mask = mask | ((ids % n_batches == 0) & (ids % 5 == 0))
-        path = os.path.join(stage, f"b{k}.parquet")
-        pq.write_table(t.filter(pa.array(mask)), path)
-        os.utime(path, (mtime + 10 * k, mtime + 10 * k))
-    with open(marker, "w") as f:
-        f.write("ok")
-    return stage
+        t = pq.read_table(src)
+        ids = t["event_id"].to_numpy()
+        for k in range(n_batches):
+            mask = ids % n_batches == k
+            if k == n_batches - 1:
+                mask = mask | ((ids % n_batches == 0) & (ids % 5 == 0))
+            pq.write_table(t.filter(pa.array(mask)), f"{out}/b{k}.parquet")
+
+    return cached_stage("redeliv", sf_dir, "events", build, n_batches)
 
 
 def staged_triple_sides(sf_dir: str) -> tuple[str, str]:
@@ -156,49 +203,37 @@ def staged_triple_sides(sf_dir: str) -> tuple[str, str]:
             batches (capped at the last file) — exercising the join's
             late-input filter and buffer eviction mid-replay.
 
-    Both sides have exactly 6 mtime-ordered files (lockstep triggers) and
-    are keyed by the source file's identity (restage on regeneration)."""
-    import os
-    import time
+    Both sides have exactly 6 files (lockstep triggers)."""
 
-    import duckdb
+    def build(out: str, src: str) -> None:
+        import duckdb
 
-    base = sf_dir.rstrip("/")
-    tag = os.path.basename(base)
-    st = os.stat(f"{base}/events.parquet")
-    fp = f"{st.st_size}_{st.st_mtime_ns}"
-    left = f"/tmp/slsp_triple_left_{tag}_{fp}"
-    right = f"/tmp/slsp_triple_right_{tag}_{fp}"
-    marker = os.path.join(left, "_STAGED")
-    if os.path.exists(marker):
-        return left, right
-    os.makedirs(left, exist_ok=True)
-    os.makedirs(right, exist_ok=True)
-    con = duckdb.connect()
-    src = f"read_parquet('{base}/events.parquet')"
-    sl = "least((day(ts) - 1) // 5, 5)"
-    br = f"CASE WHEN event_id % 7 = 0 THEN least({sl} + 2, 5) ELSE {sl} END"
-    mtime = time.time() - 3600
-    for k in range(6):
-        lw = f"{sl} = {k}"
-        if k >= 1:
-            lw = f"({lw}) OR ({sl} = {k - 1} AND event_id % 5 = 0)"
-        con.execute(
-            f"COPY (SELECT event_id, ts, event_type, value FROM {src} "
-            f"WHERE {lw} ORDER BY event_id) "
-            f"TO '{left}/f{k}.parquet' (FORMAT PARQUET)"
-        )
-        con.execute(
-            f"COPY (SELECT event_id, ts + INTERVAL 30 MINUTE AS rts FROM {src} "
-            f"WHERE {br} = {k} ORDER BY event_id) "
-            f"TO '{right}/f{k}.parquet' (FORMAT PARQUET)"
-        )
-        for p in (f"{left}/f{k}.parquet", f"{right}/f{k}.parquet"):
-            os.utime(p, (mtime + 10 * k, mtime + 10 * k))
-    con.close()
-    with open(marker, "w") as f:
-        f.write("ok")
-    return left, right
+        os.makedirs(f"{out}/left")
+        os.makedirs(f"{out}/right")
+        con = duckdb.connect()
+        rel = f"read_parquet('{src}')"
+        sl = "least((day(ts) - 1) // 5, 5)"
+        br = f"CASE WHEN event_id % 7 = 0 THEN least({sl} + 2, 5) ELSE {sl} END"
+        for k in range(6):
+            lw = f"{sl} = {k}"
+            if k >= 1:
+                lw = f"({lw}) OR ({sl} = {k - 1} AND event_id % 5 = 0)"
+            _duck_copy(
+                con,
+                f"SELECT event_id, ts, event_type, value FROM {rel} "
+                f"WHERE {lw} ORDER BY event_id",
+                f"{out}/left/f{k}.parquet",
+            )
+            _duck_copy(
+                con,
+                f"SELECT event_id, ts + INTERVAL 30 MINUTE AS rts FROM {rel} "
+                f"WHERE {br} = {k} ORDER BY event_id",
+                f"{out}/right/f{k}.parquet",
+            )
+        con.close()
+
+    root = cached_stage("triple", sf_dir, "events", build)
+    return f"{root}/left", f"{root}/right"
 
 
 def staged_join_sides(sf_dir: str) -> tuple[str, str]:
@@ -207,8 +242,7 @@ def staged_join_sides(sf_dir: str) -> tuple[str, str]:
     (batch = ``event_id % 3``; file 3 empty so both sources advance in
     lockstep), RIGHT = one ack per event at ``ts + 30min``, arriving in
     its event's batch — except the ``event_id % 5 = 0`` slice, delayed to
-    the final file. Both directories share mtime ordering and are keyed
-    by the source file's identity (restage on regeneration).
+    the final file.
 
     4 files per side (was 6 until r9): each micro-batch pays fixed
     source + state-store commit costs, and the boundary semantics only
@@ -218,46 +252,48 @@ def staged_join_sides(sf_dir: str) -> tuple[str, str]:
     final file (measured at sf0.01: 1330 acks late-filter-dropped, 4
     delayed pairs surviving the boundary — the same deciding branches
     as the 6-file replay at two-thirds the replay cost)."""
-    import os
-    import time
 
-    import duckdb
+    def build(out: str, src: str) -> None:
+        import duckdb
 
-    base = sf_dir.rstrip("/")
-    tag = os.path.basename(base)
-    st = os.stat(f"{base}/events.parquet")
-    fp = f"{st.st_size}_{st.st_mtime_ns}"
-    left = f"/tmp/slsp_join_left4_{tag}_{fp}"
-    right = f"/tmp/slsp_join_right4_{tag}_{fp}"
-    marker = os.path.join(left, "_STAGED")
-    if os.path.exists(marker):
-        return left, right
-    os.makedirs(left, exist_ok=True)
-    os.makedirs(right, exist_ok=True)
-    con = duckdb.connect()
-    src = f"read_parquet('{base}/events.parquet')"
-    mtime = time.time() - 3600
-    for k in range(4):
-        lw = f"event_id % 3 = {k}" if k < 3 else "FALSE"
-        con.execute(
-            f"COPY (SELECT event_id, ts, event_type FROM {src} WHERE {lw} "
-            f"ORDER BY event_id) TO '{left}/f{k}.parquet' (FORMAT PARQUET)"
-        )
-        rw = (
-            f"event_id % 3 = {k} AND event_id % 5 <> 0"
-            if k < 3
-            else "event_id % 5 = 0"
-        )
-        con.execute(
-            f"COPY (SELECT event_id, ts + INTERVAL 30 MINUTE AS rts FROM {src} "
-            f"WHERE {rw} ORDER BY event_id) TO '{right}/f{k}.parquet' (FORMAT PARQUET)"
-        )
-        for p in (f"{left}/f{k}.parquet", f"{right}/f{k}.parquet"):
-            os.utime(p, (mtime + 10 * k, mtime + 10 * k))
-    con.close()
-    with open(marker, "w") as f:
-        f.write("ok")
-    return left, right
+        os.makedirs(f"{out}/left")
+        os.makedirs(f"{out}/right")
+        con = duckdb.connect()
+        rel = f"read_parquet('{src}')"
+        for k in range(4):
+            lw = f"event_id % 3 = {k}" if k < 3 else "FALSE"
+            _duck_copy(
+                con,
+                f"SELECT event_id, ts, event_type FROM {rel} WHERE {lw} "
+                f"ORDER BY event_id",
+                f"{out}/left/f{k}.parquet",
+            )
+            rw = (
+                f"event_id % 3 = {k} AND event_id % 5 <> 0"
+                if k < 3
+                else "event_id % 5 = 0"
+            )
+            _duck_copy(
+                con,
+                f"SELECT event_id, ts + INTERVAL 30 MINUTE AS rts FROM {rel} "
+                f"WHERE {rw} ORDER BY event_id",
+                f"{out}/right/f{k}.parquet",
+            )
+        con.close()
+
+    root = cached_stage("join4", sf_dir, "events", build)
+    return f"{root}/left", f"{root}/right"
+
+
+def _cdc_select(src: str) -> str:
+    """The CDC record projection ``(user_id BIGINT, attr, ts_s BIGINT,
+    event_id)`` of the SCD2 audit cohort (``user_id % 20 = 0``)."""
+    return (
+        "SELECT CAST(user_id AS BIGINT) AS user_id, event_type AS attr, "
+        "CAST(floor(epoch(ts)) AS BIGINT) AS ts_s, "
+        "CAST(event_id AS BIGINT) AS event_id "
+        f"FROM read_parquet('{src}') WHERE user_id % 20 = 0"
+    )
 
 
 def staged_cdc_slices(sf_dir: str) -> str:
@@ -278,44 +314,25 @@ def staged_cdc_slices(sf_dir: str) -> str:
     Columns are pre-projected to the CDC record shape
     ``(user_id BIGINT, attr, ts_s BIGINT, event_id)``: epoch seconds are
     computed at stage time by the same second-truncation both oracle
-    dialects use, keeping the stream free of timestamp-type normalization.
-    Keyed by the source file's identity (restage on regeneration)."""
-    import os
-    import time
+    dialects use, keeping the stream free of timestamp-type normalization."""
 
-    import duckdb
+    def build(out: str, src: str) -> None:
+        import duckdb
 
-    base = sf_dir.rstrip("/")
-    tag = os.path.basename(base)
-    st = os.stat(f"{base}/events.parquet")
-    fp = f"{st.st_size}_{st.st_mtime_ns}"
-    stage = f"/tmp/slsp_cdc_stage_{tag}_{fp}"
-    marker = os.path.join(stage, "_STAGED")
-    if os.path.exists(marker):
-        return stage
-    os.makedirs(stage, exist_ok=True)
-    con = duckdb.connect()
-    src = f"read_parquet('{base}/events.parquet')"
-    sl = "least((day(ts) - 1) // 5, 5)"
-    mtime = time.time() - 3600
-    for k in range(6):
-        where = f"{sl} = {k}"
-        if k >= 1:
-            where = f"({where}) OR ({sl} = {k - 1} AND event_id % 5 = 0)"
-        con.execute(
-            f"COPY (SELECT CAST(user_id AS BIGINT) AS user_id, "
-            f"event_type AS attr, "
-            f"CAST(floor(epoch(ts)) AS BIGINT) AS ts_s, "
-            f"CAST(event_id AS BIGINT) AS event_id "
-            f"FROM {src} WHERE user_id % 20 = 0 AND ({where}) "
-            f"ORDER BY event_id) TO '{stage}/f{k}.parquet' (FORMAT PARQUET)"
-        )
-        p = f"{stage}/f{k}.parquet"
-        os.utime(p, (mtime + 10 * k, mtime + 10 * k))
-    con.close()
-    with open(marker, "w") as f:
-        f.write("ok")
-    return stage
+        con = duckdb.connect()
+        sl = "least((day(ts) - 1) // 5, 5)"
+        for k in range(6):
+            where = f"{sl} = {k}"
+            if k >= 1:
+                where = f"({where}) OR ({sl} = {k - 1} AND event_id % 5 = 0)"
+            _duck_copy(
+                con,
+                f"{_cdc_select(src)} AND ({where}) ORDER BY event_id",
+                f"{out}/f{k}.parquet",
+            )
+        con.close()
+
+    return cached_stage("cdc", sf_dir, "events", build)
 
 
 def staged_cdc_slices_ooo(sf_dir: str) -> str:
@@ -326,45 +343,24 @@ def staged_cdc_slices_ooo(sf_dir: str) -> str:
     "late replay" batch ``f6`` — the real-world failure a re-sharded
     binlog tail or a mis-merged backfill produces. Slices 0-5 stay
     per-key in-order (no redelivery mixing here; redelivery absorption
-    has its own staging); f6 is entirely out of order. Keyed by source
-    identity like the in-order staging."""
-    import os
-    import time
+    has its own staging); f6 is entirely out of order."""
 
-    import duckdb
+    def build(out: str, src: str) -> None:
+        import duckdb
 
-    base = sf_dir.rstrip("/")
-    tag = os.path.basename(base)
-    st = os.stat(f"{base}/events.parquet")
-    fp = f"{st.st_size}_{st.st_mtime_ns}"
-    stage = f"/tmp/slsp_cdc_ooo_{tag}_{fp}"
-    marker = os.path.join(stage, "_STAGED")
-    if os.path.exists(marker):
-        return stage
-    os.makedirs(stage, exist_ok=True)
-    con = duckdb.connect()
-    src = f"read_parquet('{base}/events.parquet')"
-    sl = "least((day(ts) - 1) // 5, 5)"
-    delayed = f"(event_id % 17 = 3 AND {sl} <= 4)"
-    proj = (
-        "SELECT CAST(user_id AS BIGINT) AS user_id, event_type AS attr, "
-        "CAST(floor(epoch(ts)) AS BIGINT) AS ts_s, "
-        "CAST(event_id AS BIGINT) AS event_id "
-        f"FROM {src} WHERE user_id % 20 = 0"
-    )
-    mtime = time.time() - 3600
-    for k in range(6):
-        con.execute(
-            f"COPY ({proj} AND {sl} = {k} AND NOT {delayed} "
-            f"ORDER BY event_id) TO '{stage}/f{k}.parquet' (FORMAT PARQUET)"
+        con = duckdb.connect()
+        sl = "least((day(ts) - 1) // 5, 5)"
+        delayed = f"(event_id % 17 = 3 AND {sl} <= 4)"
+        proj = _cdc_select(src)
+        for k in range(6):
+            _duck_copy(
+                con,
+                f"{proj} AND {sl} = {k} AND NOT {delayed} ORDER BY event_id",
+                f"{out}/f{k}.parquet",
+            )
+        _duck_copy(
+            con, f"{proj} AND {delayed} ORDER BY event_id", f"{out}/f6.parquet"
         )
-        os.utime(f"{stage}/f{k}.parquet", (mtime + 10 * k, mtime + 10 * k))
-    con.execute(
-        f"COPY ({proj} AND {delayed} ORDER BY event_id) "
-        f"TO '{stage}/f6.parquet' (FORMAT PARQUET)"
-    )
-    os.utime(f"{stage}/f6.parquet", (mtime + 60, mtime + 60))
-    con.close()
-    with open(marker, "w") as f:
-        f.write("ok")
-    return stage
+        con.close()
+
+    return cached_stage("cdc_ooo", sf_dir, "events", build)

@@ -149,3 +149,11 @@ def test_triple_chain_all_three_operator_curves(spark):
         ), f"{op}: no visible eviction"
     # the delayed id%7 ack slice is late-filter-decided mid-replay
     assert sum(r.rows_dropped_by_watermark for r in curve) > 0
+
+
+def test_stateless_run_records_empty_curve(spark):
+    """Every bounded run replaces the previous run's curve: the near-dup
+    gate keeps its state in its own stores, not in a stateful operator,
+    so after it the curve is empty — not the TTL query's six rows."""
+    assert len(_curve(spark, "stream_dedup_ttl_boundary")) == 6
+    assert _curve(spark, "stream_dedup_lsh") == []
