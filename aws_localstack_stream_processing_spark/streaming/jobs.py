@@ -3,9 +3,12 @@
 E1 ingest:  stream → decode/parse/partition-assign → partitioned lake sink
             (Firehose buffering ≈ trigger; dynamic+time partitioning ≈
             partitionBy; app.ts:400-427)
-E2 process: lake stream → watermarked dedup → LRU key assignment →
-            broadcast key join → sign → idempotent keyed sink
-            (signer/index.js:262-334)
+E2 process: lake stream → content hash → key assignment → sign →
+            put-if-absent keyed sink (signer/index.js:262-334)
+
+No job here holds streaming state. E2's one idempotence mechanism is the
+put-if-absent sink, as the reference's only guard is its put keyed by
+content hash (signer/index.js:229-242).
 """
 
 from __future__ import annotations
@@ -17,7 +20,6 @@ from ..functions import hashing
 from .dlq import foreach_batch_dlq
 from .resilience import start_and_await
 from .source import events_stream
-from .statestore import apply_state_store
 
 
 def ingest_columns(df: DataFrame) -> DataFrame:
@@ -54,7 +56,6 @@ def run_ingest_stream(
     """E1: events stream → hive-partitioned parquet lake
     (raw/partition_N/year=/month=/day=/hour=, app.ts:400,411)."""
     ev = events_stream(spark, sf_dir, max_files_per_trigger)
-    apply_state_store(spark)
     start_and_await(
         lambda: ingest_columns(ev)
         .writeStream.format("parquet")
@@ -94,7 +95,6 @@ def run_ingest_stream_manifest(
         )
         append_manifest(lake_dir, files, commit_id=batch_id)
 
-    apply_state_store(spark)
     start_and_await(
         lambda: source.writeStream.foreachBatch(_sink)
         .option("checkpointLocation", checkpoint)
@@ -118,7 +118,6 @@ def run_dlq_stream(
             F.col("props")
         ),
     )
-    apply_state_store(spark)
     start_and_await(
         lambda: ev.writeStream.foreachBatch(foreach_batch_dlq(ok_path, err_path))
         .option("checkpointLocation", checkpoint)
@@ -128,9 +127,13 @@ def run_dlq_stream(
 
 
 def signed_stream(spark: SparkSession, sf_dir: str, n_keys: int = 100) -> DataFrame:
-    """E2 transformations on the event stream: content hash → watermarked
-    dedup → key assignment → signature derivation (JVM-side sha2 here; the
-    pandas_udf variant is the batch ref_sign_pipeline)."""
+    """E2 transformations on the event stream: content hash → key
+    assignment → signature derivation (JVM-side sha2 here; the pandas_udf
+    variant is the batch ref_sign_pipeline).
+
+    Stateless: no watermark and no dedup, so a record is signed however
+    late it arrives, and a record delivered twice comes out twice. The
+    keyed sink of :func:`run_signing_stream` stores it once."""
     ev = events_stream(spark, sf_dir)
     canon = F.concat_ws(
         "|",
@@ -139,8 +142,7 @@ def signed_stream(spark: SparkSession, sf_dir: str, n_keys: int = 100) -> DataFr
         F.col("value").cast("string"),
     )
     hashed = ev.withColumn("tx_hash", F.sha2(canon, 256))
-    deduped = hashed.withWatermark("ts", "1 hour").dropDuplicates(["tx_hash"])
-    keyed = deduped.withColumn("key_id", F.pmod(F.col("event_id"), F.lit(n_keys)))
+    keyed = hashed.withColumn("key_id", F.pmod(F.col("event_id"), F.lit(n_keys)))
     priv = F.sha2(F.concat(F.lit("key_"), F.col("key_id").cast("string")), 256)
     return keyed.withColumn(
         "signature", F.sha2(F.concat(F.col("tx_hash"), F.lit("|"), priv), 256)
@@ -151,13 +153,20 @@ def run_signing_stream(
     spark: SparkSession, sf_dir: str, sink_path: str, checkpoint: str
 ) -> None:
     """E2 with an idempotent keyed sink: put-if-absent per content hash
-    (DynamoDB put semantics, signer/index.js:229-242). The KeyedParquetSink
-    converges under redelivery even without the checkpoint; with it, the
-    stream is exactly-once end to end."""
+    (DynamoDB put semantics, signer/index.js:229-242). The sink is the one
+    idempotence mechanism: it drops a hash repeated within a batch, across
+    batches and across runs, so the store holds each record once with or
+    without the checkpoint.
+
+    Upgrading a checkpoint written while :func:`signed_stream` still ran a
+    watermarked ``dropDuplicates``: the stateless plan fails on it with
+    ``STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA`` at its
+    first new batch. Start a fresh checkpoint over the same ``sink_path``;
+    the replay re-reads every record, and put-if-absent drops each one
+    already signed."""
     from .sinks import KeyedParquetSink
 
     sink = KeyedParquetSink(sink_path, "tx_hash")
-    apply_state_store(spark)
     start_and_await(
         lambda: signed_stream(spark, sf_dir)
         .writeStream.foreachBatch(sink.upsert_batch)

@@ -4,10 +4,12 @@ The reference's signature store is a DynamoDB put keyed by content hash
 (signer/index.js:229-242): re-delivery overwrites the same item, so the
 store converges no matter how many times a record arrives. This module
 gives the engine that semantics over a parquet-backed keyed table: the
-``foreachBatch`` upserter anti-joins each batch against the existing keys
-and appends only unseen ones — convergent even when the *checkpoint* is
-lost (a strictly stronger property than checkpoint-based exactly-once,
-which this composes with).
+``foreachBatch`` upserter drops keys repeated within the batch, anti-joins
+the rest against the existing keys and appends only unseen ones —
+convergent even when the *checkpoint* is lost (a strictly stronger
+property than checkpoint-based exactly-once). On the signing path
+(``streaming/jobs.py`` E2) this put-if-absent is the one idempotence
+mechanism: the stream upstream of it is stateless and never deduplicates.
 
 At warehouse scale the anti-join is a broadcast of the batch's keys against
 the key column of the sink (or a MERGE on a Delta/Iceberg table — same

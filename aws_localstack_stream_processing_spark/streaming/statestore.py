@@ -15,9 +15,13 @@ engine exposes it as a first-class switch:
 unset/empty                           → leave the session's setting alone
                                         (Spark default = HDFS-backed)
 
-The conf is captured per streaming query AT START, so ``apply`` is called
-at every ``writeStream...start()`` site in the package — session-wide
-mutation just before start is the supported per-query injection point.
+The conf is captured per streaming query AT START, so
+:func:`apply_state_store` is called just before start by
+``resilience.run_bounded``, the one start path in the package that runs
+stateful queries — session-wide mutation just before start is the
+supported per-query injection point. The jobs of ``streaming/jobs.py``
+(E1 ingest, the DLQ split, the manifest ingest, E2 signing) hold no state
+and do not call it.
 Every stateful streaming pin (watermark trilogy, both chains, the triple
 chain, the LRU ring, kv/alarm sinks) runs green under both providers —
 ``tests/test_rocksdb_state.py`` pins that equivalence plus the RocksDB

@@ -63,8 +63,69 @@ def test_signing_stream_idempotent_replay(spark, tmp):
     run_signing_stream(spark, SF_DIR, sink, ckpt)  # replay, same checkpoint
     again = spark.read.parquet(sink).count()
     assert first == again, "replay duplicated sink rows"
+    # checkpoint lost: a fresh one re-reads every record into the same store
+    run_signing_stream(spark, SF_DIR, sink, f"{tmp}/ckpt_fresh")
     df = spark.read.parquet(sink)
+    assert df.count() == first, "put-if-absent let a replay in"
     assert df.count() == df.select("tx_hash").distinct().count()
+
+
+def test_signing_stream_stores_late_and_redelivered_records_once(spark, tmp):
+    """E2 signs a record however late it arrives and stores each distinct
+    record exactly once. Object k=0 is followed, on the same checkpoint,
+    by k=1 (2 h older: 10 new ids plus a copy of one of its own records)
+    and k=2 (a redelivery of k=0). A 1 h watermark would drop every k=1
+    record as late; the put-if-absent sink alone keeps all 20."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from aws_localstack_stream_processing_spark.streaming.jobs import run_signing_stream
+
+    src, sink, ckpt = f"{tmp}/src", f"{tmp}/sink", f"{tmp}/ckpt"
+    t_us, hour_us = 1_704_110_400_000_000, 3_600_000_000  # 2024-01-01 12:00 UTC
+
+    def put(path, ids, ts_us):
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        pq.write_table(
+            pa.table(
+                {
+                    "event_id": pa.array(ids, pa.int64()),
+                    "ts": pa.array([ts_us] * len(ids), pa.timestamp("us", tz="UTC")),
+                    "event_type": pa.array(["click"] * len(ids), pa.string()),
+                    "value": pa.array([i / 4 for i in ids], pa.float64()),
+                }
+            ),
+            path,
+        )
+
+    # the source reads its schema from the top-level file, rows from k=<n>/
+    put(f"{src}/events.parquet", [], t_us)
+    put(f"{src}/k=0/events.parquet", list(range(10)), t_us + 2 * hour_us)
+    run_signing_stream(spark, src, sink, ckpt)
+    put(f"{src}/k=1/events.parquet", list(range(10, 20)) + [15], t_us)
+    put(f"{src}/k=2/events.parquet", list(range(10)), t_us + 2 * hour_us)
+    run_signing_stream(spark, src, sink, ckpt)
+
+    df = spark.read.parquet(sink)
+    assert df.count() == 20
+    assert df.select("tx_hash").distinct().count() == 20
+    assert sorted(r.key_id for r in df.select("key_id").collect()) == list(range(20))
+
+
+def test_signed_stream_plan_is_stateless(spark):
+    """E2 holds no streaming state: the put-if-absent sink is its one
+    idempotence mechanism, so no dedup, watermark or aggregate may creep
+    back into ``signed_stream``."""
+    from aws_localstack_stream_processing_spark.streaming.jobs import signed_stream
+
+    stack, names = [signed_stream(spark, SF_DIR)._jdf.queryExecution().analyzed()], set()
+    while stack:
+        node = stack.pop()
+        names.add(node.nodeName())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    stateful = ("Deduplicate", "EventTimeWatermark", "Aggregate")
+    assert not [n for n in names if n.startswith(stateful)], sorted(names)
 
 
 def test_keyring_multibatch_rotation(spark):
