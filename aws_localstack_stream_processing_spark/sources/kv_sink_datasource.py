@@ -9,6 +9,9 @@ DataSource V2 *commit protocol* — the connector-native shape::
     spark.dataSource.register(KVUpsertDataSource)
     df.writeStream.format("kv_upsert").option("path", ...).start()
 
+The store is append-only. A batch ``save()`` appends one batch under the
+next unused batch id; the ``overwrite`` save mode is refused with an error.
+
 Exactly-once anatomy (SURVEY §2.6 T2), mapping 1:1 onto what a real
 distributed sink driver does:
 
@@ -48,41 +51,7 @@ from pyspark.sql.datasource import (
 )
 
 _MARKER = "_COMMITTED"
-_TOMBSTONE = "_SUPERSEDED.json"
 _FAILPOINT_BEFORE_MARKER = "_FAILPOINT_CRASH_BEFORE_MARKER"
-
-
-def _read_tombstone(path: str) -> dict | None:
-    """The overwrite tombstone, if one is pending: ``{"survivor": id,
-    "superseded": [ids]}``. Only *meaningful* once the survivor batch is
-    committed — before that, the old store is still authoritative."""
-    import json
-
-    t = os.path.join(path, _TOMBSTONE)
-    if not os.path.exists(t):
-        return None
-    with open(t) as f:
-        return json.load(f)
-
-
-def _finish_overwrite(path: str) -> None:
-    """Complete a crashed overwrite: if a tombstone exists and its
-    survivor batch is committed, remove the superseded batch directories
-    and clear the tombstone. Idempotent; called by the next commit."""
-    import shutil
-
-    tomb = _read_tombstone(path)
-    if tomb is None:
-        return
-    survivor = os.path.join(path, f"batch={tomb['survivor']}", _MARKER)
-    if not os.path.exists(survivor):
-        # crash happened BEFORE publish completed: the overwrite never
-        # took effect — drop the stale intent, old store stands
-        os.remove(os.path.join(path, _TOMBSTONE))
-        return
-    for b in tomb["superseded"]:
-        shutil.rmtree(os.path.join(path, f"batch={b}"), ignore_errors=True)
-    os.remove(os.path.join(path, _TOMBSTONE))
 
 
 class _StagedFile(WriterCommitMessage):
@@ -97,12 +66,11 @@ class _KVWriter(DataSourceArrowWriter):
     ``pyarrow.RecordBatch`` input and stage it with one columnar parquet
     write — no per-row marshalling anywhere in the sink path."""
 
-    def __init__(self, options: dict, schema, overwrite: bool = False):
+    def __init__(self, options: dict, schema):
         self._path = options.get("path")
         if not self._path:
             raise ValueError("kv_upsert: the 'path' option is required")
         self._schema = schema  # informational; batches carry their schema
-        self._overwrite = overwrite
 
     # -- executor side ----------------------------------------------------
     def write(self, iterator) -> _StagedFile:
@@ -161,26 +129,10 @@ class _KVWriter(DataSourceArrowWriter):
                 os.remove(m.path)
 
     def commit(self, messages) -> None:
-        """Batch-mode publish honoring the save mode. ``append`` allocates
-        the next unused batch id so prior upserts survive (the
-        last-writer-wins read resolves keys across batches). ``overwrite``
-        records its intent in a ``_SUPERSEDED.json`` tombstone (atomic
-        rename), publishes the new data (under the next id — readers
-        resolve by marker + last-writer-wins, so ids need not restart at
-        0), then removes the superseded batches and clears the tombstone.
-        Crash recovery at every point in that sequence: before the
-        survivor's marker lands, the tombstone is inert (old store
-        authoritative, next commit discards it); after the marker lands,
-        readers skip the superseded ids via the tombstone and the next
-        commit finishes the removal — never a merged old+new store, never
-        an empty directory. Stray non-``batch=<int>`` entries (manual
-        copies, editor backups) are ignored rather than failing the
-        commit."""
-        import json
-        import shutil
-
-        if os.path.isdir(self._path):
-            _finish_overwrite(self._path)  # drain any crashed prior overwrite
+        """Batch-mode append: publish under the next unused batch id, so
+        prior upserts survive (the last-writer-wins read resolves keys
+        across batches). Stray non-``batch=<int>`` entries (manual copies,
+        editor backups) are ignored rather than failing the commit."""
         existing = []
         for d in os.listdir(self._path) if os.path.isdir(self._path) else []:
             if not d.startswith("batch="):
@@ -189,20 +141,7 @@ class _KVWriter(DataSourceArrowWriter):
                 existing.append(int(d.split("=", 1)[1]))
             except ValueError:
                 continue
-        new_id = max(existing, default=-1) + 1
-        if self._overwrite and existing:
-            tomb = os.path.join(self._path, _TOMBSTONE)
-            tmp = f"{tomb}.tmp.{os.getpid()}"
-            with open(tmp, "w") as f:
-                json.dump({"survivor": new_id, "superseded": existing}, f)
-            os.replace(tmp, tomb)  # intent durable BEFORE any publish
-        self._publish(messages, new_id)
-        if self._overwrite and existing:
-            for b in existing:
-                shutil.rmtree(
-                    os.path.join(self._path, f"batch={b}"), ignore_errors=True
-                )
-            os.remove(os.path.join(self._path, _TOMBSTONE))
+        self._publish(messages, max(existing, default=-1) + 1)
 
     def abort(self, messages) -> None:
         self._sweep(messages)
@@ -224,7 +163,12 @@ class KVUpsertDataSource(DataSource):
         return "kv_upsert"
 
     def writer(self, schema, overwrite: bool) -> DataSourceArrowWriter:
-        return _KVWriter(self.options, schema, overwrite)
+        if overwrite:
+            raise ValueError(
+                "kv_upsert: save mode 'overwrite' is not supported; the "
+                "store is append-only (write with mode('append'))"
+            )
+        return _KVWriter(self.options, schema)
 
     def streamWriter(self, schema, overwrite: bool) -> DataSourceStreamArrowWriter:
         return _KVStreamWriter(self.options, schema)
@@ -239,24 +183,14 @@ def register_kv_sink(spark: SparkSession) -> None:
 
 
 def committed_batches(path: str) -> list[str]:
-    """Marker-bearing batch directories, minus any an effective overwrite
-    tombstone supersedes (effective = its survivor batch is committed):
-    a reader that arrives inside the crash window between publish and
-    superseded-batch removal sees exactly the new store, not a merge."""
+    """Marker-bearing batch directories: the batches whose publish
+    completed."""
     if not os.path.isdir(path):
         return []
-    dead: set[str] = set()
-    tomb = _read_tombstone(path)
-    if tomb is not None and os.path.exists(
-        os.path.join(path, f"batch={tomb['survivor']}", _MARKER)
-    ):
-        dead = {f"batch={b}" for b in tomb["superseded"]}
     return sorted(
         os.path.join(path, d)
         for d in os.listdir(path)
-        if d.startswith("batch=")
-        and d not in dead
-        and os.path.exists(os.path.join(path, d, _MARKER))
+        if d.startswith("batch=") and os.path.exists(os.path.join(path, d, _MARKER))
     )
 
 

@@ -14,9 +14,9 @@ Delta/Iceberg commit logs):
 
 * **Writers append commit files.** :func:`append_manifest` records the
   parquet files a batch produced as a numbered JSON commit under
-  ``<lake>/_manifest/`` (atomic tmp+rename; commit numbers are the
-  streaming batch ids, so a replayed batch overwrites ITS OWN commit —
-  idempotent by construction).
+  ``<lake>/_manifest/`` (atomic tmp+rename). The writer names the commit
+  number: the streaming batch id, so a replayed batch overwrites ITS OWN
+  commit — idempotent by construction.
 * **Readers plan from the manifest.** ``format("manifest_lake")`` reads
   commit files in numeric order and assigns global row sequence numbers
   over the manifest's APPEND order — not lexicographic filename order —
@@ -56,23 +56,14 @@ def manifest_dir(lake_dir: str) -> str:
     return os.path.join(lake_dir, _MANIFEST_DIR)
 
 
-def append_manifest(
-    lake_dir: str, files: list[str], commit_id: int | None = None
-) -> int:
-    """Record ``files`` (paths under the lake) as one manifest commit.
+def append_manifest(lake_dir: str, files: list[str], commit_id: int) -> None:
+    """Record ``files`` (paths under the lake) as manifest commit
+    ``commit_id``.
 
-    ``commit_id=None`` allocates the next number; streaming writers pass
-    their batch id so a replayed batch atomically overwrites its own
-    commit instead of double-publishing. Row counts are captured here,
-    once, from the parquet footers — readers never touch metadata.
-
-    Auto-allocation is concurrency-safe: the commit file is claimed with
-    an exclusive-create (``O_EXCL``), so two concurrent writers that race
-    to the same next id cannot clobber each other — the loser retries
-    with the following id. An *explicit* ``commit_id`` still uses
-    ``os.replace`` on purpose: that path is the streaming replay
-    (epoch-owned batch ids, single writer per id by Spark's commit
-    protocol), where overwrite-on-replay is the idempotence mechanism."""
+    Streaming writers pass their batch id, so a replayed batch atomically
+    overwrites its own commit (tmp file, then ``os.replace``) instead of
+    double-publishing. Row counts are captured here, once, from the
+    parquet footers — readers never touch metadata."""
     import pyarrow.parquet as pq
 
     mdir = manifest_dir(lake_dir)
@@ -81,88 +72,11 @@ def append_manifest(
     for f in files:
         rel = os.path.relpath(os.path.abspath(f), os.path.abspath(lake_dir))
         entries.append({"path": rel, "rows": pq.ParquetFile(f).metadata.num_rows})
-    payload = json.dumps(entries)
-    if commit_id is not None:
-        out = os.path.join(mdir, f"{commit_id:010d}.json")
-        tmp = f"{out}.tmp.{os.getpid()}"
-        with open(tmp, "w") as fh:
-            fh.write(payload)
-        os.replace(tmp, out)
-        return commit_id
-    next_id = max(
-        (
-            int(f.split(".", 1)[0])
-            for f in os.listdir(mdir)
-            if f.split(".", 1)[0].isdigit() and f.endswith(".json")
-        ),
-        default=-1,
-    ) + 1
-    # full payload goes to a tmp file first; os.link() then publishes it
-    # atomically AND exclusively — readers never observe a partial commit,
-    # and a concurrent writer racing to the same id loses loudly. The tmp
-    # name carries the thread id too: two threads of one driver process
-    # appending concurrently must not clobber each other's payload.
-    import threading
-
-    tmp = os.path.join(
-        mdir, f".alloc.tmp.{os.getpid()}.{threading.get_ident()}"
-    )
+    out = os.path.join(mdir, f"{commit_id:010d}.json")
+    tmp = f"{out}.tmp.{os.getpid()}"
     with open(tmp, "w") as fh:
-        fh.write(payload)
-    try:
-        while True:
-            out = os.path.join(mdir, f"{next_id:010d}.json")
-            try:
-                os.link(tmp, out)
-            except FileExistsError:
-                next_id += 1  # lost the race — claim the following id
-                continue
-            except OSError as exc:
-                # filesystem without hard links (network/FAT mounts):
-                # O_EXCL open is the same exclusive-claim primitive,
-                # minus the readers-see-full-payload guarantee hard
-                # links give for free — acceptable on such mounts.
-                # Only the errnos that mean "links unsupported here" may
-                # take this weaker path; any other OSError (ENOSPC, EIO,
-                # …) must surface, not silently downgrade the atomic
-                # readers-never-see-partial-commit guarantee (ADVICE r8).
-                import errno
-
-                _NO_HARDLINK = {
-                    errno.EPERM,
-                    errno.EOPNOTSUPP,
-                    getattr(errno, "ENOTSUP", errno.EOPNOTSUPP),
-                    errno.EXDEV,
-                    errno.EMLINK,
-                    errno.ENOSYS,  # link() unimplemented on this mount
-                }
-                if exc.errno not in _NO_HARDLINK:
-                    raise
-                if exc.errno == errno.EPERM:
-                    # EPERM is ambiguous: some filesystems use it for
-                    # "links unsupported", but it also covers genuine
-                    # permission denials — make the downgrade visible
-                    # so a real permission problem isn't silently
-                    # absorbed by the weaker O_EXCL path (ADVICE r10).
-                    import warnings
-
-                    warnings.warn(
-                        "manifest commit: os.link() EPERM — falling back "
-                        "to O_EXCL claim; if this mount supports hard "
-                        "links, check directory permissions",
-                        RuntimeWarning,
-                        stacklevel=2,
-                    )
-                try:
-                    fd = os.open(out, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-                except FileExistsError:
-                    next_id += 1
-                    continue
-                with os.fdopen(fd, "w") as ofh:
-                    ofh.write(payload)
-            return next_id
-    finally:
-        os.unlink(tmp)
+        json.dump(entries, fh)
+    os.replace(tmp, out)
 
 
 def read_manifest(lake_dir: str) -> list[tuple[str, int, int]]:

@@ -21,6 +21,9 @@ from .dlq import foreach_batch_dlq
 from .resilience import start_and_await
 from .source import events_stream
 
+# E2's key ring size: a record signs with key ``event_id mod N_KEYS``
+N_KEYS = 100
+
 
 def ingest_columns(df: DataFrame) -> DataFrame:
     """E1 transform: key extraction with fallback, djb2 partition label
@@ -51,11 +54,10 @@ def run_ingest_stream(
     sf_dir: str,
     lake_dir: str,
     checkpoint: str,
-    max_files_per_trigger: int | None = None,
 ) -> None:
     """E1: events stream → hive-partitioned parquet lake
     (raw/partition_N/year=/month=/day=/hour=, app.ts:400,411)."""
-    ev = events_stream(spark, sf_dir, max_files_per_trigger)
+    ev = events_stream(spark, sf_dir)
     start_and_await(
         lambda: ingest_columns(ev)
         .writeStream.format("parquet")
@@ -126,7 +128,7 @@ def run_dlq_stream(
     )
 
 
-def signed_stream(spark: SparkSession, sf_dir: str, n_keys: int = 100) -> DataFrame:
+def signed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2 transformations on the event stream: content hash → key
     assignment → signature derivation (JVM-side sha2 here; the pandas_udf
     variant is the batch ref_sign_pipeline).
@@ -142,7 +144,7 @@ def signed_stream(spark: SparkSession, sf_dir: str, n_keys: int = 100) -> DataFr
         F.col("value").cast("string"),
     )
     hashed = ev.withColumn("tx_hash", F.sha2(canon, 256))
-    keyed = hashed.withColumn("key_id", F.pmod(F.col("event_id"), F.lit(n_keys)))
+    keyed = hashed.withColumn("key_id", F.pmod(F.col("event_id"), F.lit(N_KEYS)))
     priv = F.sha2(F.concat(F.lit("key_"), F.col("key_id").cast("string")), 256)
     return keyed.withColumn(
         "signature", F.sha2(F.concat(F.col("tx_hash"), F.lit("|"), priv), 256)

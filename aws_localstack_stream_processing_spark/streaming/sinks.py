@@ -17,12 +17,12 @@ logical contract, swap the implementation here).
 
 All three stores share one layout, :class:`BucketedStore`: a root of
 ``<BUCKET_COL>=N/`` hive partitions plus a ``_slsp_meta.json`` sidecar
-recording the bucket count. Every rewrite of that layout — legacy
-migration, ``resplit``, ``compact()``, the SCD2 per-bucket MERGE — and
-the retry buffer of ``streaming/retry.py`` goes through one directory
-swap, :func:`swap_dirs`: stage the new data, rename each live directory
-to a backup, rename the staged directory to live, delete the backups
-last, and remove staging only after every swap of the call succeeded.
+recording the bucket count. Every rewrite of that layout — ``resplit``,
+``compact()``, the SCD2 per-bucket MERGE — and the retry buffer of
+``streaming/retry.py`` goes through one directory swap,
+:func:`swap_dirs`: stage the new data, rename each live directory to a
+backup, rename the staged directory to live, delete the backups last,
+and remove staging only after every swap of the call succeeded.
 Opening a store runs the swap's recovery step, so a crash at any step
 leaves a store that reads exactly its pre-swap or its post-swap rows.
 """
@@ -153,9 +153,9 @@ class BucketedStore:
 
     def _sync_meta(self) -> list[str]:
         """Open the store: run :func:`swap_dirs`' recovery step, then adopt
-        the on-disk bucket count, if recorded. Stores written before the
-        meta sidecar existed keep the constructor's count (every pre-meta
-        store used the class default). Returns the root's entries."""
+        the on-disk bucket count, if recorded (a store with no data yet
+        has no sidecar and keeps the constructor's count). Returns the
+        root's entries."""
         entries = swap_dirs(self.path)
         try:
             with open(self._meta_path()) as f:
@@ -171,18 +171,18 @@ class BucketedStore:
 
     def exists(self, spark: SparkSession | None = None) -> bool:
         """True iff a bucketed store is present at ``path`` (after
-        recovering an interrupted swap). Fails LOUDLY on a legacy
-        flat-layout store (ADVICE r10): silently returning False would
-        skip the put-if-absent probe (duplicate keys appended) and the
-        mixed flat+partitioned directory would then break partition
-        discovery on read. Run ``migrate_legacy`` once."""
+        recovering an interrupted swap). Fails LOUDLY on a directory with
+        top-level parquet files (a legacy flat-layout store or any other
+        foreign table): silently returning False would skip the
+        put-if-absent probe (duplicate keys appended) and the mixed
+        flat+partitioned directory would then break partition discovery
+        on read."""
         entries = self._sync_meta()
         if any(f.endswith(".parquet") for f in entries):
             raise RuntimeError(
                 f"{self.path} holds a legacy flat-layout store "
                 f"(top-level .parquet files); the bucketed probe cannot "
-                f"see its keys. Run migrate_legacy(spark) once (with the "
-                f"owning stream stopped) before writing."
+                f"see its keys. Write the store to a fresh path."
             )
         return any(f.startswith(f"{self.BUCKET_COL}=") for f in entries)
 
@@ -250,13 +250,16 @@ class BucketedStore:
         a semi join against the BROADCAST batch keys (the Bloom-filter
         shape — one store scan, no store shuffle, no store broadcast;
         ≤|batch| rows survive), then the batch anti-joins that tiny hit
-        set. Plan shape pinned in ``tests/test_sinks_metrics.py``.
+        set. The hits need no dedup: an anti join's result does not
+        depend on duplicates on its right side, and store keys are unique
+        under put-if-absent. Plan shape pinned in
+        ``tests/test_sinks_metrics.py``.
         """
         from pyspark.sql import functions as F
 
         hits = seen.join(
             F.broadcast(fresh.select(key_col)), key_col, "left_semi"
-        ).distinct()
+        )
         return fresh.join(F.broadcast(hits), key_col, "left_anti")
 
     def _put_if_absent(
@@ -363,46 +366,6 @@ class KeyedParquetSink(BucketedStore):
         return F.pmod(
             F.xxhash64(F.col(self.key_col)), F.lit(self.n_buckets)
         ).cast("int")
-
-    def migrate_legacy(self, spark: SparkSession) -> int:
-        """One-shot migration of a pre-bucketing flat store into the
-        bucketed layout (ADVICE r10): read the top-level files, route
-        every row to its bucket partition, retire the flat files. Must
-        run with the owning stream stopped (same precondition as
-        :meth:`compact`). Returns the number of flat files migrated;
-        idempotent (no flat files ⇒ no-op).
-
-        Crash tolerance (ADVICE r11): the migrated layout is staged with
-        its meta sidecar and replaces the whole store through
-        :func:`swap_dirs`, so a crash at any step reopens as either the
-        flat store or the migrated one — never rows in BOTH layouts,
-        which a re-run would append a second time. Any bucketed rows
-        already present are unioned in and key-deduped, so every re-run
-        converges to the same store."""
-        import glob as _glob
-
-        flat = sorted(
-            os.path.join(self.path, f)
-            for f in self._sync_meta()
-            if f.endswith(".parquet")
-        )
-        if not flat:
-            return 0
-        rows = spark.read.parquet(*flat).withColumn(
-            self.BUCKET_COL, self._bucket_expr()
-        )
-        prior_dirs = sorted(
-            _glob.glob(os.path.join(self.path, f"{self.BUCKET_COL}=*"))
-        )
-        if prior_dirs:
-            prior = spark.read.option("basePath", self.path).parquet(
-                *prior_dirs
-            )
-            rows = prior.unionByName(rows).dropDuplicates([self.key_col])
-        staged = self._stage(rows)
-        self._write_meta(staged)
-        swap_dirs(self.path, staged)
-        return len(flat)
 
     def upsert_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch hook: put-if-absent per key.
@@ -634,8 +597,6 @@ class Scd2ParquetSink(BucketedStore):
     the authoritative changelog and clears the flag. After a rebuild the
     quarantined record IS history, so a replay of the offending batch
     re-adjudicates it as a safe duplicate — the quarantine self-heals.
-    Stores written before the metadata existed fall back per row to the
-    retained-opening position (the pre-r11 guard strength).
 
     Idempotence: the merge is a deterministic function of
     (existing history ∪ batch records), and redelivered batches dedup to
@@ -664,66 +625,6 @@ class Scd2ParquetSink(BucketedStore):
         from pyspark.sql import functions as F
 
         return F.pmod("user_id", F.lit(self.n_buckets)).cast("int")
-
-    def _infer_schema(self, spark: SparkSession):
-        """Every read of the history table uses an EXPLICIT superset
-        schema (ADVICE r12, refining the r11 fix), cached like every
-        store schema — the ONLY drift this store can exhibit is the two
-        optional guard-metadata columns, and the superset always
-        includes them. After the first merge over a pre-r11 store, only
-        the affected buckets carry ``seen_ts_s``/``seen_event_id`` (no
-        other bucket is rewritten), and a plain parquet read infers the
-        schema from an ARBITRARY file — so the guard's
-        ``"seen_ts_s" in hist.columns`` checks were nondeterministic:
-        when a legacy file won inference, existing guard metadata was
-        silently dropped and the guard degraded to the retained-opening
-        head, the exact collapsed-tail corruption it exists to catch.
-
-        r11's answer was ``mergeSchema``, which is deterministic but
-        reads EVERY file's footer at planning time — before the bucket
-        filter applies — turning the documented O(affected buckets)
-        per-batch cost into O(total files) (ADVICE r12). Instead we now
-        sample ONE data file's footer, extend its schema with the two
-        guard-metadata fields when the sampled file is legacy (types
-        copied from ``valid_from_s``/``event_id`` — the metadata records
-        positions in those columns' domains), add the ``bucket``
-        partition column, and hand the superset to ``spark.read.schema``:
-        zero inference, one footer read regardless of store size, legacy
-        rows still surface NULL metadata for the per-row ``coalesce``
-        fallbacks. Mixed stores stay deterministic because the only
-        schema drift this store can exhibit is exactly those two
-        optional columns — new files are a strict superset of legacy
-        ones (pinned by
-        ``test_mixed_schema_store_guard_metadata_deterministic``).
-
-        The sample uses a local ``glob`` like :meth:`needs_rebuild`; on
-        an object store this becomes one ``FileSystem.listStatus`` of one
-        bucket directory — still O(1) in store size."""
-        import glob as _glob
-
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
-        files = sorted(
-            _glob.glob(os.path.join(self.path, "bucket=*", "*.parquet"))
-        )
-        if not files:  # empty store: preserve the old failure mode
-            return super()._infer_schema(spark)
-        sampled = spark.read.parquet(files[0]).schema
-        by_name = {f.name: f for f in sampled.fields}
-        fields = [f for f in sampled.fields if f.name != "bucket"]
-        if "seen_ts_s" not in by_name:
-            fields.append(
-                StructField(
-                    "seen_ts_s", by_name["valid_from_s"].dataType, True
-                )
-            )
-            fields.append(
-                StructField(
-                    "seen_event_id", by_name["event_id"].dataType, True
-                )
-            )
-        fields.append(StructField("bucket", IntegerType(), True))
-        return StructType(fields)
 
     @staticmethod
     def merge_plan(cand: DataFrame) -> DataFrame:
@@ -798,18 +699,10 @@ class Scd2ParquetSink(BucketedStore):
         pos = F.struct(
             F.col("ts_s").alias("t"), F.col("event_id").alias("e")
         )
-        if "seen_ts_s" in hist.columns:
-            # per-key max DELIVERED position (coalesce: rows written
-            # before the metadata existed fall back to their opening)
-            head_pos = F.struct(
-                F.coalesce("seen_ts_s", "valid_from_s").alias("t"),
-                F.coalesce("seen_event_id", "event_id").alias("e"),
-            )
-        else:  # legacy store: retained-opening head only
-            head_pos = F.struct(
-                F.col("valid_from_s").alias("t"),
-                F.col("event_id").alias("e"),
-            )
+        # per-key max DELIVERED position
+        head_pos = F.struct(
+            F.col("seen_ts_s").alias("t"), F.col("seen_event_id").alias("e")
+        )
         head = hist.groupBy("user_id").agg(F.max(head_pos).alias("__head"))
         old = (
             cand.join(head, "user_id")
@@ -909,21 +802,13 @@ class Scd2ParquetSink(BucketedStore):
             # class docstring; quarantined records never advance it)
             seen_src = cand.select("user_id", "ts_s", "event_id")
             if hist is not None:
-                if "seen_ts_s" in hist.columns:
-                    prior = hist.select(
+                seen_src = seen_src.unionByName(
+                    hist.select(
                         "user_id",
-                        F.coalesce("seen_ts_s", "valid_from_s").alias("ts_s"),
-                        F.coalesce("seen_event_id", "event_id").alias(
-                            "event_id"
-                        ),
+                        F.col("seen_ts_s").alias("ts_s"),
+                        F.col("seen_event_id").alias("event_id"),
                     )
-                else:  # legacy store: openings are the best record we have
-                    prior = hist.select(
-                        "user_id",
-                        F.col("valid_from_s").alias("ts_s"),
-                        "event_id",
-                    )
-                seen_src = seen_src.unionByName(prior)
+                )
                 old = hist.filter(F.col("bucket").isin(buckets)).select(
                     "user_id",
                     "attr",
@@ -1047,9 +932,6 @@ class Scd2ParquetSink(BucketedStore):
                 .filter(F.col("bucket").isin(buckets))
                 .join(F.broadcast(flagged), "user_id", "left_anti")
             )
-            for c in ("seen_ts_s", "seen_event_id"):  # legacy stores
-                if c not in keep.columns:
-                    keep = keep.withColumn(c, F.lit(None).cast("bigint"))
             self._swap_affected_buckets(keep.unionByName(rebuilt), buckets)
         finally:
             flagged.unpersist()

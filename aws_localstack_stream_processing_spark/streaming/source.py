@@ -6,8 +6,9 @@ the S3→SQS→Lambda hop: new files under a path become micro-batch work items,
 checkpointed exactly-once — no queue, no visibility timeouts.
 
 For the correctness harness the driver's ``events`` parquet is treated as an
-append-only stream (one file = one micro-batch; ``maxFilesPerTrigger``
-reproduces the reference's batch-size knob, app.ts:46).
+append-only stream (one file = one micro-batch). The reference's batch-size
+knob (app.ts:46) is the file source's ``maxFilesPerTrigger``; the replay
+reader below sets it to 1.
 
 Replay contract for staged inputs. Queries that pin behaviour under
 redelivery and arrival order replay a *stage*: a directory of parquet files
@@ -39,23 +40,18 @@ from pyspark.sql import functions as F
 from ..session import apply_runtime_confs
 
 
-def events_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ``events`` table as an unbounded file stream (SURVEY §1.1 #1)."""
     apply_runtime_confs(spark)
     base = sf_dir.rstrip("/")
     batch = spark.read.parquet(f"{base}/events.parquet")
     # the file source requires a directory; pathGlobFilter selects the table
     # (the prefix filter of the reference's S3 notification, app.ts:437)
-    reader = spark.readStream.schema(batch.schema).option(
-        "pathGlobFilter", "events.parquet"
+    df = (
+        spark.readStream.schema(batch.schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(base)
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(base)
     # ts arrives as a raw nanosecond LongType, TIMESTAMP_NTZ, or TIMESTAMP
     # depending on the writer. Watermarks require TIMESTAMP (not NTZ), so
     # normalize; the session timezone is pinned to UTC, which makes the

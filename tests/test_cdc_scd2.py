@@ -488,48 +488,3 @@ def test_multi_key_quarantine_rebuild_only_affected_buckets(spark, tmp_path):
     before = _history_rows(spark, sink)
     sink.merge_batch(late, 1)
     assert _history_rows(spark, sink) == before
-
-
-def test_mixed_schema_store_guard_metadata_deterministic(spark, tmp_path):
-    """ADVICE r11: a store whose buckets carry MIXED schemas (legacy
-    buckets without seen_ts_s/seen_event_id next to post-r11 buckets
-    with them) must still run the guard at full strength. Plain parquet
-    reads infer the schema from an arbitrary file — when a legacy file
-    won, recorded guard metadata was silently dropped and the
-    collapsed-tail case slipped through. The schema-merged read makes
-    the metadata columns always visible; legacy rows degrade per-row to
-    the retained-opening fallback."""
-    sink = Scd2ParquetSink(str(tmp_path / "h"))
-    # legacy bucket=1 (user 1): history WITHOUT the seen_* columns
-    spark.createDataFrame(
-        [(1, "signup", 1, 1000, 3000, 1, False),
-         (1, "error", 2, 3000, None, 3, True)],
-        "user_id BIGINT, attr STRING, version_n BIGINT, valid_from_s BIGINT,"
-        " valid_to_s BIGINT, event_id BIGINT, is_current BOOLEAN",
-    ).coalesce(1).write.parquet(str(tmp_path / "h" / "bucket=1"))
-    # post-r11 bucket=2 (user 2): a@1000 then a@2000 collapse into one
-    # version whose recorded last-seen position (2000) exceeds its
-    # retained opening (1000) — the collapsed-tail case
-    sink.merge_batch(
-        spark.createDataFrame(
-            [(2, "a", 1000, 1), (2, "a", 2000, 2)], _SCHEMA
-        ),
-        0,
-    )
-    assert sink.read(spark).filter("user_id = 2").count() == 1
-    # one batch touching BOTH buckets: the history read spans mixed
-    # schemas. user 2's late b@1500 sits between the collapsed records —
-    # ONLY the seen metadata can catch it; user 1's new record merges.
-    sink.merge_batch(
-        spark.createDataFrame(
-            [(1, "ok", 4000, 5), (2, "b", 1500, 99)], _SCHEMA
-        ),
-        1,
-    )
-    q = spark.read.parquet(sink.quarantine_path)
-    assert [(r.user_id, r.ts_s, r.event_id, r.reason) for r in q.collect()] \
-        == [(2, 1500, 99, "out_of_order")]
-    u1 = sink.read(spark).filter("user_id = 1").orderBy("version_n")
-    assert [r.attr for r in u1.collect()] == ["signup", "error", "ok"]
-    # the merged read always exposes the metadata columns
-    assert "seen_ts_s" in sink.read(spark).columns

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from aws_localstack_stream_processing_spark.sources.firehose_datasource import (
@@ -122,7 +123,8 @@ def test_commit_is_idempotent_per_batch_id(spark, tmp_path):
 
 def test_batch_append_preserves_prior_batches(spark, tmp_path):
     """ADVICE r4: a second mode("append") save must NOT wipe the store —
-    it allocates the next unused batch id; overwrite mode clears."""
+    it allocates the next unused batch id. The store is append-only:
+    mode("overwrite") is refused and leaves both batches in place."""
     register_kv_sink(spark)
     out = str(tmp_path / "store")
     one = spark.createDataFrame([("k1", 1), ("k2", 1)], "key string, v int")
@@ -134,18 +136,19 @@ def test_batch_append_preserves_prior_batches(spark, tmp_path):
     # k1 survived the second write; k2 upserted to the later batch's value
     assert back == {"k1": 1, "k2": 2, "k3": 2}
     three = spark.createDataFrame([("k9", 9)], "key string, v int")
-    three.write.format("kv_upsert").option("path", out).mode("overwrite").save()
-    assert len(committed_batches(out)) == 1
-    assert {r.key: r.v for r in read_kv_table(spark, out, "key").collect()} == {
-        "k9": 9
-    }
+    refused = "kv_upsert: save mode 'overwrite' is not supported"
+    with pytest.raises(Exception, match=refused):
+        three.write.format("kv_upsert").option("path", out).mode(
+            "overwrite"
+        ).save()
+    assert len(committed_batches(out)) == 2
+    assert {r.key: r.v for r in read_kv_table(spark, out, "key").collect()} == back
 
 
-def test_commit_ignores_stray_dirs_and_overwrite_publishes_first(spark, tmp_path):
+def test_commit_ignores_stray_dirs(spark, tmp_path):
     """ADVICE r5: a stray non-integer 'batch=*' entry (manual copy, editor
-    backup) must not fail the commit, and overwrite must publish the new
-    batch BEFORE removing superseded ones — so the store is never observed
-    empty. The stray dir also must stay invisible to the reader."""
+    backup) must not fail the commit, and must stay invisible to the
+    reader."""
     import os
 
     register_kv_sink(spark)
@@ -154,10 +157,12 @@ def test_commit_ignores_stray_dirs_and_overwrite_publishes_first(spark, tmp_path
     one.write.format("kv_upsert").option("path", out).mode("append").save()
     os.makedirs(f"{out}/batch=0.bak", exist_ok=True)  # stray: int() would raise
     two = spark.createDataFrame([("a", 2)], "key string, v int")
-    two.write.format("kv_upsert").option("path", out).mode("overwrite").save()
-    assert len(committed_batches(out)) == 1
-    # overwrite allocated a NEW id (publish-first), never reused/cleared-then-0
-    assert os.path.basename(committed_batches(out)[0]) == "batch=1"
+    two.write.format("kv_upsert").option("path", out).mode("append").save()
+    # the stray entry neither failed the id allocation nor took an id
+    assert [os.path.basename(d) for d in committed_batches(out)] == [
+        "batch=0",
+        "batch=1",
+    ]
     assert {r.key: r.v for r in read_kv_table(spark, out, "key").collect()} == {
         "a": 2
     }
@@ -230,77 +235,3 @@ def test_uncommitted_batch_invisible_to_reader(spark, tmp_path):
     pq.write_table(pa.table({"key": ["x"]}), f"{out}/batch=0/part-0.parquet")
     # no _COMMITTED marker → crash mid-commit; reader must not see it
     assert committed_batches(out) == []
-
-
-def test_overwrite_crash_after_publish_before_removal(spark, tmp_path):
-    """ADVICE r6: crash AFTER the overwrite's new batch is committed but
-    BEFORE the superseded batches are removed. Without the tombstone the
-    reader would merge old+new stores (keys absent from the new dataset
-    resurrect). With it: the reader sees exactly the new store, and the
-    next commit finishes the removal."""
-    import json
-    import shutil
-
-    from aws_localstack_stream_processing_spark.sources.kv_sink_datasource import (
-        _TOMBSTONE,
-    )
-
-    register_kv_sink(spark)
-    out = str(tmp_path / "store")
-    old = spark.createDataFrame([("gone", 1), ("kept", 1)], "key string, v int")
-    old.write.format("kv_upsert").option("path", out).mode("append").save()
-    new = spark.createDataFrame([("kept", 2)], "key string, v int")
-
-    # simulate the crash window: let overwrite run fully, then restore the
-    # superseded dir and the tombstone exactly as they stood pre-removal
-    saved = str(tmp_path / "saved_batch0")
-    shutil.copytree(f"{out}/batch=0", saved)
-    new.write.format("kv_upsert").option("path", out).mode("overwrite").save()
-    shutil.copytree(saved, f"{out}/batch=0")
-    with open(f"{out}/{_TOMBSTONE}", "w") as f:
-        json.dump({"survivor": 1, "superseded": [0]}, f)
-
-    # reader inside the crash window: new store only — 'gone' must NOT resurrect
-    assert [os.path.basename(d) for d in committed_batches(out)] == ["batch=1"]
-    assert {r.key: r.v for r in read_kv_table(spark, out, "key").collect()} == {
-        "kept": 2
-    }
-    # next commit drains the crashed overwrite: dir removed, tombstone cleared
-    more = spark.createDataFrame([("k3", 3)], "key string, v int")
-    more.write.format("kv_upsert").option("path", out).mode("append").save()
-    assert not os.path.isdir(f"{out}/batch=0")
-    assert not os.path.exists(f"{out}/{_TOMBSTONE}")
-    assert {r.key: r.v for r in read_kv_table(spark, out, "key").collect()} == {
-        "kept": 2,
-        "k3": 3,
-    }
-
-
-def test_overwrite_tombstone_inert_before_survivor_commits(spark, tmp_path):
-    """Crash BEFORE the survivor's marker lands: the tombstone is inert —
-    the old store stays authoritative and the next commit discards the
-    stale intent instead of deleting live data."""
-    import json
-
-    from aws_localstack_stream_processing_spark.sources.kv_sink_datasource import (
-        _TOMBSTONE,
-    )
-
-    register_kv_sink(spark)
-    out = str(tmp_path / "store")
-    old = spark.createDataFrame([("a", 1)], "key string, v int")
-    old.write.format("kv_upsert").option("path", out).mode("append").save()
-    with open(f"{out}/{_TOMBSTONE}", "w") as f:
-        json.dump({"survivor": 1, "superseded": [0]}, f)  # batch=1 never landed
-
-    assert [os.path.basename(d) for d in committed_batches(out)] == ["batch=0"]
-    assert {r.key: r.v for r in read_kv_table(spark, out, "key").collect()} == {
-        "a": 1
-    }
-    more = spark.createDataFrame([("b", 2)], "key string, v int")
-    more.write.format("kv_upsert").option("path", out).mode("append").save()
-    assert not os.path.exists(f"{out}/{_TOMBSTONE}")
-    assert {r.key: r.v for r in read_kv_table(spark, out, "key").collect()} == {
-        "a": 1,
-        "b": 2,
-    }

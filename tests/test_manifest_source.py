@@ -27,10 +27,10 @@ def test_manifest_append_order_beats_filename_order(tmp_path):
     lake = str(tmp_path / "lake")
     os.makedirs(lake)
     pq.write_table(_tbl([0, 1, 2]), f"{lake}/zzz.parquet")
-    append_manifest(lake, [f"{lake}/zzz.parquet"])
+    append_manifest(lake, [f"{lake}/zzz.parquet"], commit_id=0)
     plan1 = read_manifest(lake)
     pq.write_table(_tbl([3, 4]), f"{lake}/aaa.parquet")  # sorts before zzz
-    append_manifest(lake, [f"{lake}/aaa.parquet"])
+    append_manifest(lake, [f"{lake}/aaa.parquet"], commit_id=1)
     plan2 = read_manifest(lake)
     assert [os.path.basename(f) for f, _, _ in plan2] == ["zzz.parquet", "aaa.parquet"]
     assert plan2[: len(plan1)] == plan1  # consumed prefix unchanged
@@ -53,7 +53,7 @@ def test_batch_read_equals_source(spark, tmp_path):
     os.makedirs(lake)
     pq.write_table(_tbl(list(range(40))), f"{lake}/f1.parquet")
     pq.write_table(_tbl(list(range(40, 65))), f"{lake}/f2.parquet")
-    append_manifest(lake, [f"{lake}/f1.parquet", f"{lake}/f2.parquet"])
+    append_manifest(lake, [f"{lake}/f1.parquet", f"{lake}/f2.parquet"], commit_id=0)
     register_manifest_source(spark)
     df = (
         spark.read.format("manifest_lake")
@@ -72,7 +72,7 @@ def test_unmanifested_file_is_invisible(spark, tmp_path):
     lake = str(tmp_path / "lake")
     os.makedirs(lake)
     pq.write_table(_tbl([0, 1, 2]), f"{lake}/seen.parquet")
-    append_manifest(lake, [f"{lake}/seen.parquet"])
+    append_manifest(lake, [f"{lake}/seen.parquet"], commit_id=0)
     pq.write_table(_tbl([9, 9, 9]), f"{lake}/orphan.parquet")  # no commit
     register_manifest_source(spark)
     df = spark.read.format("manifest_lake").option("path", lake).load()
@@ -104,116 +104,11 @@ def test_checkpoint_restart_resumes_growing_manifest(spark, tmp_path):
         q.awaitTermination()
 
     pq.write_table(_tbl(list(range(30))), f"{lake}/m.parquet")
-    append_manifest(lake, [f"{lake}/m.parquet"])
+    append_manifest(lake, [f"{lake}/m.parquet"], commit_id=0)
     run_once()
     assert spark.read.parquet(str(out)).count() == 30
     pq.write_table(_tbl(list(range(30, 45))), f"{lake}/a-early.parquet")
-    append_manifest(lake, [f"{lake}/a-early.parquet"])
+    append_manifest(lake, [f"{lake}/a-early.parquet"], commit_id=1)
     run_once()
     ids = sorted(r.event_id for r in spark.read.parquet(str(out)).collect())
     assert ids == list(range(45))  # every id exactly once, incl. the new 15
-
-
-def test_append_manifest_auto_alloc_race(tmp_path):
-    """ADVICE r6: two writers racing to the same auto-allocated commit id
-    must not clobber each other — the loser retries with the next id.
-    Simulated by pre-claiming the id the allocator would pick."""
-    import json
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from aws_localstack_stream_processing_spark.sources.manifest_datasource import (
-        append_manifest,
-        manifest_dir,
-        read_manifest,
-    )
-
-    lake = str(tmp_path / "lake")
-    os.makedirs(lake)
-    f1, f2 = f"{lake}/a.parquet", f"{lake}/b.parquet"
-    pq.write_table(pa.table({"x": [1, 2]}), f1)
-    pq.write_table(pa.table({"x": [3]}), f2)
-    cid0 = append_manifest(lake, [f1])
-    # a rival writer lands the id our next auto-allocation would compute
-    rival = os.path.join(manifest_dir(lake), f"{cid0 + 1:010d}.json")
-    with open(rival, "w") as fh:
-        json.dump([{"path": "a.parquet", "rows": 2}], fh)
-    cid1 = append_manifest(lake, [f2])  # must NOT clobber the rival
-    assert cid1 == cid0 + 2
-    with open(rival) as fh:  # rival's commit intact, byte for byte
-        assert json.load(fh) == [{"path": "a.parquet", "rows": 2}]
-    plan = read_manifest(lake)
-    assert [os.path.basename(p) for p, _, _ in plan] == [
-        "a.parquet",
-        "a.parquet",
-        "b.parquet",
-    ]
-    # no tmp litter left behind
-    assert all(
-        not f.startswith(".alloc") for f in os.listdir(manifest_dir(lake))
-    )
-
-
-def test_append_manifest_hardlink_fallback_errnos(tmp_path, monkeypatch):
-    """ADVICE r9: the hard-link publish downgrades to the O_EXCL claim
-    ONLY for errnos meaning 'links unsupported on this mount' — now
-    including ENOSYS (link() unimplemented) — while EPERM additionally
-    warns (it doubles as a genuine permission denial) and a real I/O
-    error must propagate, never silently weaken the commit guarantee."""
-    import errno
-    import json
-    import os
-    import warnings
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    import pytest
-
-    from aws_localstack_stream_processing_spark.sources.manifest_datasource import (
-        append_manifest,
-        manifest_dir,
-        read_manifest,
-    )
-
-    lake = str(tmp_path / "lake")
-    os.makedirs(lake)
-    data = f"{lake}/a.parquet"
-    pq.write_table(pa.table({"x": [1, 2, 3]}), data)
-
-    def deny(code):
-        def link(src, dst, **kw):
-            raise OSError(code, os.strerror(code), dst)
-
-        return link
-
-    # ENOSYS: fallback, no warning, commit lands and reads back
-    monkeypatch.setattr(os, "link", deny(errno.ENOSYS))
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # any warning would fail
-        cid = append_manifest(lake, [data])
-    assert [os.path.basename(p) for p, _, _ in read_manifest(lake)] == [
-        "a.parquet"
-    ]
-
-    # EPERM: fallback succeeds but the downgrade is made visible
-    monkeypatch.setattr(os, "link", deny(errno.EPERM))
-    with pytest.warns(RuntimeWarning, match="EPERM"):
-        append_manifest(lake, [data])
-
-    # EPERM fallback still honours the exclusive claim: pre-claim the
-    # next id, the allocator must skip it, not clobber it
-    rival = os.path.join(manifest_dir(lake), f"{cid + 2:010d}.json")
-    with open(rival, "w") as fh:
-        json.dump([{"path": "rival.parquet", "rows": 9}], fh)
-    with pytest.warns(RuntimeWarning):
-        cid3 = append_manifest(lake, [data])
-    assert cid3 == cid + 3
-    with open(rival) as fh:
-        assert json.load(fh)[0]["path"] == "rival.parquet"
-
-    # EIO: a genuine I/O failure must surface, not downgrade
-    monkeypatch.setattr(os, "link", deny(errno.EIO))
-    with pytest.raises(OSError):
-        append_manifest(lake, [data])

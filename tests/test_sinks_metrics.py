@@ -296,7 +296,7 @@ def test_keyed_sink_bucket_compaction(spark, tmp_path):
     assert sink.read(spark).count() == 2500
 
 
-# -- round 11: compaction concurrency guard, legacy migration, resplit ------
+# -- round 11: compaction concurrency guard, legacy layout, resplit ---------
 
 
 def test_compact_aborts_on_concurrent_append(spark, tmp_path):
@@ -352,14 +352,10 @@ def test_compact_aborts_on_concurrent_append(spark, tmp_path):
     assert sink.read(spark).count() == n_before + 50
 
 
-def test_legacy_flat_store_fails_loudly_then_migrates(spark, tmp_path):
+def test_legacy_flat_store_fails_loudly(spark, tmp_path):
     """ADVICE r10: a store written by the pre-bucketing flat layout must
     not silently read as absent (probe skipped → duplicate keys). The
-    sink fails loudly, and migrate_legacy() converts it one-shot — after
-    which upserts probe correctly against the migrated keys."""
-    import glob
-    import os
-
+    sink fails loudly."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -380,17 +376,6 @@ def test_legacy_flat_store_fails_loudly_then_migrates(spark, tmp_path):
     )
     with pytest.raises(RuntimeError, match="legacy flat-layout"):
         sink.upsert_batch(batch, 0)
-    n = sink.migrate_legacy(spark)
-    assert n > 0
-    assert not glob.glob(os.path.join(path, "*.parquet"))  # flat files gone
-    assert sink.exists(spark)
-    # 400-499 are dups of migrated keys: put-if-absent sees them
-    sink.upsert_batch(batch, 0)
-    out = sink.read(spark)
-    assert out.count() == 600
-    assert out.filter("payload = 'old'").count() == 500
-    # second migrate is a no-op
-    assert sink.migrate_legacy(spark) == 0
 
 
 def test_keyed_sink_resplit_doubles_buckets(spark, tmp_path):
