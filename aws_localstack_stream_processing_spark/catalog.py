@@ -49,8 +49,7 @@ _NANOS_TS_COLS: dict[str, list[str]] = {"events": ["ts"]}
 # a cached copy with ~one row group per core via a byte-exact pyarrow
 # roundtrip (values, schema, and logical types unchanged — the DuckDB
 # oracle keeps reading the originals, which is itself a check that the
-# relayout is content-preserving). Set SPARK_GRAFT_LAYOUT_CACHE=0 to
-# disable and scan the originals as-is.
+# relayout is content-preserving).
 
 _RELAYOUT_MIN_ROWS = 1_000  # below this, single-task scans are already fine
 _MIN_ROWS_PER_GROUP = 64
@@ -79,8 +78,6 @@ def _layout_cache_root() -> str:
 
 def _maybe_relayout(sf_dir: str, name: str) -> str:
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-    if os.environ.get("SPARK_GRAFT_LAYOUT_CACHE", "1") == "0":
-        return path
     try:
         import pyarrow.parquet as pq
     except ImportError:  # pragma: no cover - pyarrow ships with pyspark

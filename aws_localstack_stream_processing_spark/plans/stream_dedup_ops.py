@@ -438,8 +438,8 @@ def stream_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixed store-IO costs dominate data parallelism at harness volume
     run_bounded(
         spark,
-        lambda: stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", f"{work}/ckpt")
+        lambda ckpt: stream.writeStream.foreachBatch(_gate)
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start(),
         shuffle_partitions=4,

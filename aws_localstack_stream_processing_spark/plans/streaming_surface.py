@@ -46,10 +46,11 @@ def _to_memory(df: DataFrame, mode: str) -> DataFrame:
     only trims fixed overhead for the bounded verification streams."""
     names: list[str] = []
 
-    def _start():
+    def _start(_checkpoint):
         # fresh memory-sink table per attempt: a spawn-flake retry
         # (resilience.start_and_await) must not collide with the
-        # dead attempt's registered sink name
+        # dead attempt's registered sink name; a memory sink keeps no
+        # checkpoint, so run_bounded's directory goes unused
         names.append(f"slsp_mem_{uuid.uuid4().hex[:12]}")
         return (
             df.writeStream.format("memory")
@@ -484,7 +485,7 @@ def stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = replay_stream(spark, src_dir)
     if dict(ev.dtypes)["ts"] == "bigint":
         stream = stream.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    run_mv_stream(spark, stream, f"{work}/mv", f"{work}/ckpt")
+    run_mv_stream(spark, stream, f"{work}/mv")
     return read_mv(spark, f"{work}/mv")
 
 
@@ -813,10 +814,9 @@ def stream_alarm_actions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count("*").alias("n"))
     store = tempfile.mkdtemp(prefix="slsp_alarm_store_")
     sink = AlarmActionSink(store, _ALARM_THRESHOLD)
-    ckpt = tempfile.mkdtemp(prefix="slsp_alarm_ckpt_")
     run_bounded(
         spark,
-        lambda: hourly.writeStream.foreachBatch(sink.process_batch)
+        lambda ckpt: hourly.writeStream.foreachBatch(sink.process_batch)
         .outputMode("complete")
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
@@ -924,10 +924,9 @@ def stream_kv_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed_schema = spark.read.parquet(src_dir).schema
     keyed = spark.readStream.schema(keyed_schema).parquet(src_dir)
     store = tempfile.mkdtemp(prefix="slsp_kv_store_")
-    ckpt = tempfile.mkdtemp(prefix="slsp_kv_ckpt_")
     run_bounded(
         spark,
-        lambda: keyed.writeStream.format("kv_upsert")
+        lambda ckpt: keyed.writeStream.format("kv_upsert")
         .option("path", store)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
@@ -1307,8 +1306,9 @@ def stream_chained_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     the late redelivered copies with TTL-bounded state, the surviving
     first-occurrences flow straight into a 1-day tumbling count/sum in
     append mode, and the emitted windows must equal the composed oracle.
-    Both operators' per-batch state curves land in
-    ``streaming/statelog.py`` (pinned in tests/test_state_metrics.py).
+    Both operators' per-batch state curves land in the bounded-run
+    record of ``streaming/metrics.py`` (pinned in
+    tests/test_state_metrics.py).
     At 100 TB this is the E2->A1 production topology: one checkpoint, one
     shuffle per stateful boundary, state bounded by delay x arrival rate
     (dedup) plus delay x window-rate (agg)."""
@@ -1694,8 +1694,8 @@ def stream_cdc_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # volume; a real deployment keeps the session default)
     run_bounded(
         spark,
-        lambda: stream.writeStream.foreachBatch(sink.merge_batch)
-        .option("checkpointLocation", f"{work}/ckpt")
+        lambda ckpt: stream.writeStream.foreachBatch(sink.merge_batch)
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start(),
         shuffle_partitions=4,
@@ -1793,8 +1793,8 @@ def stream_cdc_scd2_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = Scd2ParquetSink(f"{work}/history")
     run_bounded(
         spark,
-        lambda: stream.writeStream.foreachBatch(sink.merge_batch)
-        .option("checkpointLocation", f"{work}/ckpt")
+        lambda ckpt: stream.writeStream.foreachBatch(sink.merge_batch)
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start(),
         shuffle_partitions=4,

@@ -32,7 +32,7 @@ RUNTIME_CONFS: dict[str, str] = {
     # bytes/parallelism govern at small scale; at 100 TB the 128 MiB
     # maxPartitionBytes term governs instead, so this is scale-neutral.
     "spark.sql.files.openCostInBytes": "131072",
-    # statelog.note_state_metrics reads q.recentProgress, which this conf
+    # metrics.note_run reads q.recentProgress, which this conf
     # caps (default 100): a bounded harness run with more micro-batches
     # would silently truncate the per-batch state curve. Our staged
     # replays run ≤10 batches; 1000 gives a 100× margin at trivial cost.

@@ -59,11 +59,9 @@ def guard_ring_topology(checkpoint_location: str, n_rings: int) -> None:
     ``tests/test_keyring_reshard.py`` bypasses this guard and observes
     the double-use.
 
-    So, exactly like the state-store provider guard
-    (``statestore.apply_state_store``): record the ring count in a
-    checkpoint sidecar on first start, and RAISE on any restart whose
-    ring count differs. The supported reshard is the replay runbook
-    (PLANS.md round-13): drain the stream at a batch boundary, start a
+    So: record the ring count in a checkpoint sidecar on first start,
+    and RAISE on any restart whose ring count differs. The supported
+    reshard is the replay runbook (PLANS.md round-13): drain the stream at a batch boundary, start a
     FRESH checkpoint with the new G (rings reseed in rank order — the
     same deterministic seed a first boot uses), and replay the full
     source from the lake (T8); the replay converges to a valid G'-ring

@@ -25,7 +25,6 @@ def run_mv_stream(
     spark: SparkSession,
     source: DataFrame,
     mv_dir: str,
-    checkpoint: str,
 ) -> None:
     """Maintain per-event_type (sum(value), count) partials from a stream."""
 
@@ -38,8 +37,8 @@ def run_mv_stream(
 
     run_bounded(
         spark,
-        lambda: source.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
+        lambda ckpt: source.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start(),
     )

@@ -11,9 +11,9 @@ Two layers of defense:
    worker fork under CPU steal gets time to arrive at all.
 2. :func:`start_and_await` — every bounded ``start(); awaitTermination()``
    site in the package goes through it, most of them via
-   :func:`run_bounded` — retries the WHOLE query a bounded
-   number of times, but only when the failure is (a) the worker-spawn class
-   and (b) apparently pre-data: nothing in the commit log and no completed
+   :func:`run_bounded` — retries the WHOLE query up to :data:`RETRIES`
+   times, but only when the failure is (a) the worker-spawn class and (b)
+   apparently pre-data: nothing in the commit log and no completed
    batch in the query's progress.
 
 **The retry contract (ADVICE r12).** The safety of a restart rests on the
@@ -26,10 +26,11 @@ construction (memory sinks get a fresh query name per attempt and are
 re-read from scratch; ``KeyedParquetSink`` is put-if-absent;
 ``Scd2ParquetSink`` merges are deterministic functions of store ∪ batch
 with per-batch-id overwrite quarantines; the lake/DLQ sinks overwrite
-per-partition paths), so the restart converges regardless — but a caller
-wiring a NON-idempotent sink through :func:`start_and_await` must pass
-``retries=0``. The virgin check narrows retries to the earliest failure
-window; it is a precision filter, not the safety argument.
+per-partition paths), so the restart converges regardless — and a sink
+that is NOT replay-idempotent must not be run through
+:func:`start_and_await` at all. The virgin check narrows retries to the
+earliest failure window; it is a precision filter, not the safety
+argument.
 
 **Detection is two-channel** (ADVICE r12): the exception text carries the
 streaming-query status dump in the common local-mode path, but wrapper
@@ -42,17 +43,19 @@ completed. Either channel suffices; both absent → re-raise.
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 from typing import Callable
 
-from .planlog import note_plan
-from .statelog import note_state_metrics
-from .statestore import apply_state_store
+from .metrics import note_run
 
 _SPAWN_MARKERS = (
     "Python worker failed to connect back",
     "PythonWorkerFactory",
 )
 _VIRGIN_MARKER = "Committed Offsets: {}"
+# restarts of one query after a transient spawn failure
+RETRIES = 2
 
 
 def is_transient_spawn_failure(msg: str) -> bool:
@@ -75,17 +78,18 @@ def query_never_progressed(q) -> bool:
         return False
 
 
-def start_and_await(start: Callable, retries: int = 2):
-    """``q = start(); q.awaitTermination(); return q`` with a bounded
-    retry on transient worker-spawn failures.
+def start_and_await(start: Callable):
+    """``q = start(); q.awaitTermination(); return q`` with up to
+    :data:`RETRIES` restarts on transient worker-spawn failures.
 
     ``start`` must build a FRESH query per call (fresh memory-sink query
-    name / same checkpoint for checkpointed sinks) and every sink the
+    name / same checkpoint for checkpointed sinks), and every sink the
     query writes must be replay-idempotent — the package's sinks all are
-    (module docstring); pass ``retries=0`` otherwise. Non-spawn failures
-    and spawn failures with committed progress re-raise immediately.
+    (module docstring); a sink that is not must not be run through here.
+    Non-spawn failures and spawn failures with committed progress re-raise
+    immediately.
     """
-    for attempt in range(retries + 1):
+    for attempt in range(RETRIES + 1):
         q = start()
         try:
             q.awaitTermination()
@@ -94,26 +98,31 @@ def start_and_await(start: Callable, retries: int = 2):
             msg = str(e)
             spawn = any(m in msg for m in _SPAWN_MARKERS)
             virgin = _VIRGIN_MARKER in msg or query_never_progressed(q)
-            if attempt < retries and spawn and virgin:
+            if attempt < RETRIES and spawn and virgin:
                 continue
             raise
     raise AssertionError("unreachable")  # pragma: no cover
 
 
 def run_bounded(spark, start: Callable, shuffle_partitions: int | None = None):
-    """Run one bounded streaming query to completion and record it: pin
-    ``spark.sql.shuffle.partitions`` to ``shuffle_partitions`` for the run
-    when given (restored afterwards), select the state store, run
-    :func:`start_and_await`, then record the executed plan and the
-    per-batch state curve (``planlog``, ``statelog``). Returns the query."""
+    """Run one bounded streaming query to completion and record it.
+
+    ``start(checkpoint)`` builds the query on the checkpoint directory this
+    call owns: one fresh temp directory per call, reused by a spawn-flake
+    retry and removed once the query has terminated (a bounded run is
+    never resumed). ``spark.sql.shuffle.partitions`` is pinned to
+    ``shuffle_partitions`` for the run when given (restored afterwards);
+    the state-store provider is whatever the session has. The run goes
+    through :func:`start_and_await`, then its executed plan and per-batch
+    state curve are recorded (``metrics.note_run``). Returns the query."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     if shuffle_partitions:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    ckpt = tempfile.mkdtemp(prefix="slsp_ckpt_")
     try:
-        apply_state_store(spark)
-        q = start_and_await(start)
+        q = start_and_await(lambda: start(ckpt))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    note_plan(q)
-    note_state_metrics(q)
+        shutil.rmtree(ckpt, ignore_errors=True)
+    note_run(q)
     return q

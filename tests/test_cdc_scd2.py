@@ -129,10 +129,6 @@ def test_checkpoint_resume_continues_exactly_once(spark):
     import os
     import shutil
 
-    from aws_localstack_stream_processing_spark.streaming.statestore import (
-        apply_state_store,
-    )
-
     src = staged_cdc_slices(SF_DIR)
     work = tempfile.mkdtemp(prefix="slsp_scd2_resume_")
     part_src = os.path.join(work, "src")
@@ -152,7 +148,6 @@ def test_checkpoint_resume_continues_exactly_once(spark):
     schema = spark.read.parquet(f"{src}/f0.parquet").schema
 
     def run_stream():
-        apply_state_store(spark)
         q = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")

@@ -1,5 +1,5 @@
 """The scan-layout remediation cache (catalog._maybe_relayout): content
-preservation, skip conditions, idempotence, and the kill switch."""
+preservation, skip conditions, idempotence, and source invalidation."""
 
 from __future__ import annotations
 
@@ -52,14 +52,6 @@ def test_relayout_idempotent_no_rewrite():
     out2 = _maybe_relayout(SF_DIR, "events")
     assert out2 == out1
     assert os.path.getmtime(out2) == mtime  # cache hit, not a rewrite
-
-
-def test_kill_switch_scans_original():
-    os.environ["SPARK_GRAFT_LAYOUT_CACHE"] = "0"
-    try:
-        assert _maybe_relayout(SF_DIR, "events") == f"{SF_DIR}/events.parquet"
-    finally:
-        del os.environ["SPARK_GRAFT_LAYOUT_CACHE"]
 
 
 def test_regenerated_source_invalidates_cache(tmp_path):

@@ -50,7 +50,7 @@ def _live_fingerprints(spark) -> dict[str, dict[str, int]]:
     fps: dict[str, dict[str, int]] = {}
     for name, qd in sorted(all_queries().items()):
         if name.startswith("stream_"):
-            continue  # streaming plans: pinned in test_streaming/statelog
+            continue  # streaming plans: pinned below, from metrics.LAST_RUN
         # CacheManager rewrites any subplan previously persisted ANYWHERE
         # in the session into InMemoryTableScan, so a query's plan shape
         # depends on session cache history (discovered when the full-suite
@@ -208,8 +208,8 @@ def test_aqe_final_fingerprints_match_pinned(spark):
 # ---------------------------------------------------------------------------
 # Streaming plans (r9): the batch gate above cannot see stream_* queries
 # (a streaming physical plan only exists while its query runs), so their
-# fingerprints come from the planlog capture each harness run records at
-# termination. What this pins that the streaming LINT cannot: the exact
+# fingerprints come from the plan each bounded harness run records at
+# termination (metrics.LAST_RUN). What this pins that the streaming LINT cannot: the exact
 # stateful-operator inventory (StateStoreSave/Restore, StreamingDeduplicate,
 # StreamingSymmetricHashJoin, FlatMapGroupsInPandasWithState), the watermark
 # assignment count, and the exchange shape of every streaming query — an
@@ -227,16 +227,16 @@ _STREAMFP_PATH = os.path.join(
 def _live_stream_fingerprints(spark) -> dict[str, dict[str, int]]:
     from aws_localstack_stream_processing_spark.plans import all_queries
     from aws_localstack_stream_processing_spark.plans.planfp import fingerprint
-    from aws_localstack_stream_processing_spark.streaming import planlog
+    from aws_localstack_stream_processing_spark.streaming import metrics
 
     fps: dict[str, dict[str, int]] = {}
     for name, qd in sorted(all_queries().items()):
         if not name.startswith("stream_"):
             continue
         spark.catalog.clearCache()
-        planlog.LAST_STREAM_PLAN["plan"] = ""
+        metrics.LAST_RUN["plan"] = ""
         qd.fn(spark, SF_DIR)
-        plan = planlog.LAST_STREAM_PLAN["plan"]
+        plan = metrics.LAST_RUN["plan"]
         assert plan, f"{name}: no streaming plan captured"
         fps[name] = fingerprint(plan)
     spark.catalog.clearCache()

@@ -730,8 +730,7 @@ def test_centroid_outliers_take_ordered(spark):
 def test_streaming_registry_wide_plan_lint(spark):
     """The streaming edition of the registry-wide lint (VERDICT r4 #3).
     A streaming plan only exists while its query runs, so the surface
-    harness records each run's executed plan (streaming_surface
-    ._note_plan) and this sweep replays every stream_* query and asserts,
+    harness records each run's executed plan (metrics.note_run) and this sweep replays every stream_* query and asserts,
     for each, the properties that must hold at 100 TB/day:
 
     - no row-at-a-time Python eval (BatchEvalPython); the one sanctioned
@@ -745,16 +744,16 @@ def test_streaming_registry_wide_plan_lint(spark):
       semantics, SURVEY §2.6 T5.)
     """
     from aws_localstack_stream_processing_spark.plans import all_queries
-    from aws_localstack_stream_processing_spark.streaming import planlog
+    from aws_localstack_stream_processing_spark.streaming import metrics
 
     failures = []
     swept = 0
     for name, qd in all_queries().items():
         if not name.startswith("stream_"):
             continue
-        planlog.LAST_STREAM_PLAN["plan"] = ""
+        metrics.LAST_RUN["plan"] = ""
         qd.fn(spark, SF_DIR)
-        plan = planlog.LAST_STREAM_PLAN["plan"]
+        plan = metrics.LAST_RUN["plan"]
         if not plan:
             failures.append(f"{name}: no streaming plan captured")
             continue

@@ -72,7 +72,7 @@ def test_reraises_after_bounded_retries():
         return _FakeQuery(RuntimeError(_SPAWN_MSG))
 
     with pytest.raises(RuntimeError):
-        start_and_await(start, retries=2)
+        start_and_await(start)
     assert len(attempts) == 3  # initial + 2 retries, then give up
 
 

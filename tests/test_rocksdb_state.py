@@ -10,31 +10,24 @@ Spark 4 bundles the provider (``rocksdbjni`` jar); this module proves the
 engine's semantics are store-independent:
 
 - every ``stream_*`` oracle query hash-matches DuckDB under RocksDB, and
-- the statelog curves (TTL-dedup boundedness, join-buffer eviction, the
-  triple chain's three per-operator curves) hold under RocksDB, with
-  provider evidence (rocksdb custom metrics) recorded per batch —
-  trusting the conf took effect is not enough.
+- the bounded-run state curves (TTL-dedup boundedness, join-buffer
+  eviction, the triple chain's three per-operator curves) hold under
+  RocksDB, with provider evidence (rocksdb custom metrics) recorded per
+  batch — trusting the conf took effect is not enough.
 
-Store selection is ``SPARK_GRAFT_STATE_STORE=rocksdb`` applied at every
-query-start site (``streaming/statestore.py``); the fixture restores the
-session's provider conf afterwards so the rest of the suite keeps running
-on the default store.
+The engine leaves the state-store provider as the session has it, so the
+fixture sets the provider conf on the session and restores it afterwards;
+the rest of the suite keeps running on the default store.
 """
 
 from __future__ import annotations
-
-import os
 
 import duckdb
 import pytest
 
 from aws_localstack_stream_processing_spark.plans import all_queries
-from aws_localstack_stream_processing_spark.streaming.statelog import (
+from aws_localstack_stream_processing_spark.streaming.metrics import (
     state_metrics_df,
-)
-from aws_localstack_stream_processing_spark.streaming.statestore import (
-    _CONF,
-    rocksdb_available,
 )
 
 from .conftest import SF_DIR, normalize
@@ -48,25 +41,31 @@ STREAM_ORACLE_NAMES = sorted(
 )
 
 
+_CONF = "spark.sql.streaming.stateStore.providerClass"
+_ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+
+def rocksdb_available(spark) -> bool:
+    """True when the bundled RocksDB JNI native library actually loads in
+    this environment (jar-on-classpath alone doesn't prove the .so
+    extracts and links on this libc)."""
+    try:
+        spark.sparkContext._jvm.org.rocksdb.RocksDB.loadLibrary()
+        return True
+    except Exception:
+        return False
+
+
 @pytest.fixture(scope="module")
 def rocksdb(spark):
-    """Arm RocksDB store selection for this module; restore after."""
+    """Run this module's streaming queries on RocksDB; restore after."""
     if not rocksdb_available(spark):
         pytest.skip("RocksDB JNI native library not loadable here")
-    prev_env = os.environ.get("SPARK_GRAFT_STATE_STORE")
-    prev_conf = None
-    try:
-        prev_conf = spark.conf.get(_CONF)
-    except Exception:
-        prev_conf = None
-    os.environ["SPARK_GRAFT_STATE_STORE"] = "rocksdb"
+    prev_conf = spark.conf.get(_CONF, None)
+    spark.conf.set(_CONF, _ROCKSDB)
     try:
         yield spark
     finally:
-        if prev_env is None:
-            os.environ.pop("SPARK_GRAFT_STATE_STORE", None)
-        else:
-            os.environ["SPARK_GRAFT_STATE_STORE"] = prev_env
         if prev_conf:
             spark.conf.set(_CONF, prev_conf)
         else:
@@ -100,23 +99,22 @@ def test_stream_oracle_match_on_rocksdb(name, rocksdb, duck):
 
 
 def test_rocksdb_actually_ran(rocksdb):
-    """Provider evidence: the statelog's per-batch rocksdb flag (derived
+    """Provider evidence: the state curve's per-batch rocksdb flag (derived
     from rocksdb* custom metrics only the RocksDB store emits) is 1 for
-    every batch of a stateful run under the env switch — and 0 when the
-    switch is off (guards against the conf silently not taking effect,
+    every batch of a stateful run under the RocksDB conf — and 0 when the
+    conf is unset (guards against the conf silently not taking effect,
     which would turn this whole module into a no-op re-test of HDFS)."""
     QUERIES["stream_dedup_ttl_boundary"].fn(rocksdb, SF_DIR).collect()
     rows = state_metrics_df(rocksdb).collect()
     assert rows and all(r.rocksdb == 1 for r in rows)
     # flip off: same query on the session default must NOT read as rocksdb
-    prev = os.environ.pop("SPARK_GRAFT_STATE_STORE")
     rocksdb.conf.unset(_CONF)
     try:
         QUERIES["stream_dedup_ttl_boundary"].fn(rocksdb, SF_DIR).collect()
         rows = state_metrics_df(rocksdb).collect()
         assert rows and all(r.rocksdb == 0 for r in rows)
     finally:
-        os.environ["SPARK_GRAFT_STATE_STORE"] = prev
+        rocksdb.conf.set(_CONF, _ROCKSDB)
 
 
 def test_ttl_dedup_state_bounded_on_rocksdb(rocksdb):
@@ -190,161 +188,3 @@ def test_rocksdb_changelog_checkpointing_variant(rocksdb, duck):
             rocksdb.conf.unset(conf)
         else:
             rocksdb.conf.set(conf, prev)
-
-
-# -- round 11: the migration runbook (VERDICT r10 #5) ------------------------
-
-
-def test_state_store_migration_guard_and_replay_runbook(spark, tmp_path):
-    """A real deployment has EXISTING HDFS-state checkpoints, and Spark
-    forbids changing the provider mid-checkpoint — by silently ignoring
-    the new conf, not by failing. Both halves of the runbook, pinned:
-
-    1. FAIL LOUDLY: restarting an HDFS-written checkpoint under
-       SPARK_GRAFT_STATE_STORE=rocksdb raises (our guard), because Spark
-       itself would silently restore the old provider — demonstrated by
-       bypassing the guard and observing rocksdb=0 provider evidence on
-       the restarted batches.
-    2. RECIPE: drain → fresh checkpoint under RocksDB → replay the full
-       source from the lake (T8) converges to the same result, with
-       rocksdb=1 evidence per batch.
-    """
-    import os
-    import shutil
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from aws_localstack_stream_processing_spark.streaming.statelog import (
-        note_state_metrics,
-        state_metrics_df,
-    )
-    from aws_localstack_stream_processing_spark.streaming.statestore import (
-        apply_state_store,
-        checkpoint_provider,
-    )
-
-    if not rocksdb_available(spark):
-        pytest.skip("RocksDB JNI native library not loadable here")
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    base = int(
-        spark.sql("SELECT unix_timestamp('2024-01-01 00:00:00')").collect()[0][0]
-    )
-
-    def slice_df(k):
-        # overlapping ids across slices exercise the dedup state store
-        return spark.range(k * 60, k * 60 + 100).select(
-            F.col("id").alias("event_id"),
-            F.timestamp_seconds(F.lit(base + k * 60) + F.col("id") % 60)
-            .alias("ts"),
-        )
-
-    def add_slices(lo, hi):
-        # single FILES, not directories — the streaming file source lists
-        # files under the path; a nested part-file dir reads as nothing
-        import glob
-
-        for k in range(lo, hi):
-            tmp = str(tmp_path / f"stage{k}")
-            slice_df(k).coalesce(1).write.mode("overwrite").parquet(tmp)
-            shutil.move(
-                glob.glob(f"{tmp}/part-*.parquet")[0], f"{src}/f{k}.parquet"
-            )
-            shutil.rmtree(tmp)
-
-    def run(ckpt, name):
-        # foreachBatch sink: memory sinks cannot recover from an existing
-        # checkpoint (phase 2 restarts one), and the parquet output doubles
-        # as the replay-convergence evidence for phase 3
-        import os as _os
-
-        schema = "event_id BIGINT, ts TIMESTAMP"
-        out_dir = str(tmp_path / f"out_{name}")
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .withWatermark("ts", "1 hour")
-            .dropDuplicates(["event_id"])
-            .writeStream.foreachBatch(
-                lambda b, i: b.write.mode("append").parquet(out_dir)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        note_state_metrics(q)
-        return (
-            spark.read.parquet(out_dir).count()
-            if _os.path.isdir(out_dir)
-            else 0
-        )
-
-    ckpt_hdfs = str(tmp_path / "ckpt_hdfs")
-    prev_env = os.environ.pop("SPARK_GRAFT_STATE_STORE", None)
-    try:
-        spark.conf.unset(_CONF)
-    except Exception:
-        pass
-    try:
-        add_slices(0, 3)
-        run(ckpt_hdfs, "mig_phase1")
-        rows = state_metrics_df(spark).collect()
-        assert rows and all(r.rocksdb == 0 for r in rows)
-        recorded = checkpoint_provider(ckpt_hdfs)
-        assert recorded and recorded.endswith("HDFSBackedStateStoreProvider")
-
-        # -- half 1: the guard fails loudly on an in-place provider flip
-        os.environ["SPARK_GRAFT_STATE_STORE"] = "rocksdb"
-        with pytest.raises(RuntimeError, match="migration blocked"):
-            apply_state_store(spark, checkpoint_location=ckpt_hdfs)
-        # and WHY the guard exists: bypass it (set the conf directly, as a
-        # naive operator would) — Spark restarts WITHOUT error and silently
-        # keeps the checkpointed HDFS provider (rocksdb=0 on new batches)
-        from aws_localstack_stream_processing_spark.streaming.statestore import (
-            PROVIDERS,
-        )
-
-        spark.conf.set(_CONF, PROVIDERS["rocksdb"])
-        add_slices(3, 6)
-        run(ckpt_hdfs, "mig_phase2")
-        rows = state_metrics_df(spark).collect()
-        assert rows and all(r.rocksdb == 0 for r in rows), (
-            "expected Spark to silently restore the checkpointed HDFS "
-            "provider; if this ever starts reading rocksdb=1, Spark's "
-            "restart semantics changed and the guard should be revisited"
-        )
-
-        # -- half 2: the runbook — fresh checkpoint + full replay from the
-        # lake under RocksDB converges to the same result
-        ckpt_rocks = str(tmp_path / "ckpt_rocks")
-        apply_state_store(spark, checkpoint_location=ckpt_rocks)  # no raise
-        n_rocks = run(ckpt_rocks, "mig_phase3")
-        rows = state_metrics_df(spark).collect()
-        assert rows and all(r.rocksdb == 1 for r in rows)
-        assert (
-            checkpoint_provider(ckpt_rocks).endswith("RocksDBStateStoreProvider")
-        )
-        # replay result = full distinct set (same answer the HDFS lineage
-        # produced across phases 1+2 combined: append-mode memory tables
-        # reset per query, so compare against the batch ground truth)
-        truth = (
-            spark.read.parquet(f"{src}/f*.parquet")
-            .select("event_id")
-            .distinct()
-            .count()
-        )
-        assert n_rocks == truth
-    finally:
-        if prev_env is None:
-            os.environ.pop("SPARK_GRAFT_STATE_STORE", None)
-        else:
-            os.environ["SPARK_GRAFT_STATE_STORE"] = prev_env
-        try:
-            spark.conf.unset(_CONF)
-        except Exception:
-            pass
-        shutil.rmtree(str(tmp_path), ignore_errors=True)

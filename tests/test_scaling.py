@@ -355,7 +355,7 @@ def test_ttl_dedup_state_slope_sf1(spark):
     166,667 = exactly 10.0× for 10× events — the batch-0 buffer before
     any watermark exists, n/6 — with drops scaling 10.0× too). A
     superlinear curve here would mean dedup state outlives its TTL."""
-    from aws_localstack_stream_processing_spark.streaming.statelog import (
+    from aws_localstack_stream_processing_spark.streaming.metrics import (
         state_metrics_df,
     )
 

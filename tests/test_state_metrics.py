@@ -1,6 +1,6 @@
 """Streaming state-size monitoring (VERDICT r6 #3).
 
-``streaming/statelog.py`` records every bounded run's per-batch
+``streaming/metrics.py`` records every bounded run's per-batch
 ``stateOperators`` metrics; these tests pin the boundedness claims the
 TTL-dedup and stream-stream-join queries make, as an explicit per-batch
 CURVE rather than a single end-state number:
@@ -18,7 +18,7 @@ from __future__ import annotations
 import duckdb
 
 from aws_localstack_stream_processing_spark.plans import all_queries
-from aws_localstack_stream_processing_spark.streaming.statelog import (
+from aws_localstack_stream_processing_spark.streaming.metrics import (
     state_metrics_df,
 )
 
@@ -103,7 +103,7 @@ def test_state_curve_deterministic_under_replay(spark):
 
 def test_chained_stateful_both_operator_curves(spark):
     """VERDICT r7 #4: the chained dedup->window query runs TWO stateful
-    operators in one streaming query, and the statelog must carry a
+    operators in one streaming query, and the bounded-run record must carry a
     bounded per-batch curve for EACH (dedup state TTL-evicts; aggregate
     state holds only un-emitted windows, shrinking as windows close)."""
     n = _events_count()

@@ -339,12 +339,29 @@ def test_mv_stream_replay_idempotent(spark, tmp):
             s = s.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
         return s
 
-    run_mv_stream(spark, stream(), f"{tmp}/mv", f"{tmp}/ckpt1")
+    run_mv_stream(spark, stream(), f"{tmp}/mv")
     first = {(r.event_type): (r.sum_value, r.n_events) for r in read_mv(spark, f"{tmp}/mv").collect()}
     # fresh checkpoint -> all batches replay against the same MV directory
-    run_mv_stream(spark, stream(), f"{tmp}/mv", f"{tmp}/ckpt2")
+    run_mv_stream(spark, stream(), f"{tmp}/mv")
     second = {(r.event_type): (r.sum_value, r.n_events) for r in read_mv(spark, f"{tmp}/mv").collect()}
     assert first == second
+
+
+def test_bounded_runs_remove_their_checkpoints(spark, tmp_path, monkeypatch):
+    """A bounded run owns its checkpoint and removes it once the query has
+    terminated: after the kv and alarm sink queries, no checkpoint (a
+    directory holding an ``offsets`` log) remains under the temp directory.
+    Their stores stay, since the returned DataFrames read them lazily."""
+    import tempfile
+
+    from aws_localstack_stream_processing_spark.plans import all_queries
+
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", None)  # re-read TMPDIR
+    queries = all_queries()
+    for name in ("stream_kv_upsert_sink", "stream_alarm_actions"):
+        queries[name].fn(spark, SF_DIR).collect()
+    assert [str(p.parent) for p in tmp_path.rglob("offsets")] == []
 
 
 def test_late_drop_query_semantics(spark):
