@@ -18,19 +18,6 @@ from pyspark.sql import functions as F
 
 from .session import apply_runtime_confs
 
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
 # parquet TIMESTAMP(NANOS) columns per table (read as long, converted here)
 _NANOS_TS_COLS: dict[str, list[str]] = {"events": ["ts"]}
 
@@ -152,14 +139,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(col, F.expr(f"timestamp_micros({col} DIV 1000)"))
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view (for the SQL API surface)."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

@@ -3,10 +3,10 @@
 Images / audio / video ride the engine as opaque ``binary`` columns plus a
 typed metadata struct; decode / feature-extract / resize / frame-sample run
 as Arrow-batched ``mapInPandas`` operators. The real codecs (PIL, ffmpeg,
-torchaudio, …) are not in this container, so the decode step is either a
-clearly-marked :class:`NotImplementedError` stub or a deterministic fake —
-the Spark-side plumbing (schema, batching, partition-parallel execution) is
-real and tested.
+torchaudio, …) are not in this container, so container headers are parsed
+for real (:func:`parse_media_header`) and the pixel decode step is a
+deterministic fake — the Spark-side plumbing (schema, batching,
+partition-parallel execution) is real and tested.
 """
 
 from __future__ import annotations
@@ -20,18 +20,6 @@ STUB_FEATURE_SCHEMA = (
     "doc_id bigint, byte_len bigint, content_sha string, "
     "width bigint, height bigint, n_frames bigint, n_chunks bigint"
 )
-
-
-def decode_image(data: bytes) -> dict:
-    """Full pixel decode — requires an image codec not present in this
-    container. Swap in PIL/torchvision here; the mapInPandas plumbing in
-    :func:`stub_decode_features` is unchanged. Container HEADERS, by
-    contrast, are parsed for real: see :func:`parse_media_header`."""
-    raise NotImplementedError(
-        "pixel codecs are not available in this environment; "
-        "parse_media_header covers the real header path, "
-        "stub_decode_features the deterministic fake path"
-    )
 
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"

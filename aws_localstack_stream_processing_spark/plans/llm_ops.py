@@ -36,6 +36,7 @@ from .dialect import (
     to_double_arr,
     unnest_fn,
     views,
+    xor,
 )
 from .registry import query
 
@@ -353,10 +354,8 @@ def _simhash_hamming_expr(d: str) -> str:
     def dvs(col: str, p: int) -> str:
         return hashing.hexdigit_val(f"substr({col}, {p + 1}, 1)", d)
 
-    xor_fn = "({a} ^ {b})" if d == "spark" else "xor({a}, {b})"
     return " + ".join(
-        hashing.popcount4(xor_fn.format(a=dvs("sa", p), b=dvs("sb", p)))
-        for p in range(16)
+        hashing.popcount4(xor(dvs("sa", p), dvs("sb", p), d)) for p in range(16)
     )
 
 

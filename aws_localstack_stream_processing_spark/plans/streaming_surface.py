@@ -14,6 +14,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..streaming.dlq import with_validity
 from ..streaming.keyring import lru_keyring_assign
 from ..streaming.resilience import run_bounded
 from ..streaming.source import (
@@ -121,12 +122,7 @@ def stream_validity_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("props")
         ),
     )
-    marked = ev.withColumn(
-        "result",
-        F.when(
-            F.get_json_object("props_c", "$.k").isNotNull(), F.lit("Ok")
-        ).otherwise(F.lit("ProcessingFailed")),
-    )
+    marked = with_validity(ev, "props_c")
     agg = marked.groupBy("result").agg(F.count("*").alias("n_records"))
     return _to_memory(agg, "complete")
 

@@ -58,14 +58,6 @@ _VIRGIN_MARKER = "Committed Offsets: {}"
 RETRIES = 2
 
 
-def is_transient_spawn_failure(msg: str) -> bool:
-    """True iff the streaming failure MESSAGE shows a Python-worker spawn
-    flake that struck before ANY offset was committed — the text channel
-    of the restart precondition (see the module docstring for the query-
-    handle channel and the replay-idempotence contract both rest on)."""
-    return any(m in msg for m in _SPAWN_MARKERS) and _VIRGIN_MARKER in msg
-
-
 def query_never_progressed(q) -> bool:
     """Query-handle channel of the virgin test: no completed batch ever
     reported progress. Progress is only recorded on batch COMPLETION, so

@@ -747,6 +747,32 @@ class Scd2ParquetSink(BucketedStore):
             .alias("reason"),
         )
 
+    @classmethod
+    def _versioned(cls, cand: DataFrame, seen_src: DataFrame) -> DataFrame:
+        """:meth:`merge_plan` over ``cand``, each row carrying its key's
+        max delivered position over ``seen_src`` (columns ``user_id,
+        ts_s, event_id``) as ``seen_ts_s``/``seen_event_id`` — the stored
+        row layout shared by the merge and the rebuild."""
+        from pyspark.sql import functions as F
+
+        seen = seen_src.groupBy("user_id").agg(
+            F.max(
+                F.struct(F.col("ts_s").alias("t"), F.col("event_id").alias("e"))
+            ).alias("__seen")
+        )
+        return cls.merge_plan(cand).join(seen, "user_id").select(
+            "user_id",
+            "attr",
+            "version_n",
+            "valid_from_s",
+            "valid_to_s",
+            "event_id",
+            "bucket",
+            "is_current",
+            F.col("__seen.t").alias("seen_ts_s"),
+            F.col("__seen.e").alias("seen_event_id"),
+        )
+
     def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import functions as F
 
@@ -817,26 +843,9 @@ class Scd2ParquetSink(BucketedStore):
                     "bucket",
                 )
                 cand = cand.unionByName(old)
-            seen = seen_src.groupBy("user_id").agg(
-                F.max(
-                    F.struct(
-                        F.col("ts_s").alias("t"), F.col("event_id").alias("e")
-                    )
-                ).alias("__seen")
+            self._swap_affected_buckets(
+                self._versioned(cand, seen_src), buckets
             )
-            versioned = self.merge_plan(cand).join(seen, "user_id").select(
-                "user_id",
-                "attr",
-                "version_n",
-                "valid_from_s",
-                "valid_to_s",
-                "event_id",
-                "bucket",
-                "is_current",
-                F.col("__seen.t").alias("seen_ts_s"),
-                F.col("__seen.e").alias("seen_event_id"),
-            )
-            self._swap_affected_buckets(versioned, buckets)
         finally:
             if hist is not None:
                 hist.unpersist()
@@ -908,25 +917,7 @@ class Scd2ParquetSink(BucketedStore):
             buckets = [
                 r.bucket for r in recs.select("bucket").distinct().collect()
             ]
-            seen = recs.groupBy("user_id").agg(
-                F.max(
-                    F.struct(
-                        F.col("ts_s").alias("t"), F.col("event_id").alias("e")
-                    )
-                ).alias("__seen")
-            )
-            rebuilt = self.merge_plan(recs).join(seen, "user_id").select(
-                "user_id",
-                "attr",
-                "version_n",
-                "valid_from_s",
-                "valid_to_s",
-                "event_id",
-                "bucket",
-                "is_current",
-                F.col("__seen.t").alias("seen_ts_s"),
-                F.col("__seen.e").alias("seen_event_id"),
-            )
+            rebuilt = self._versioned(recs, recs)
             keep = (
                 self._read_store(spark)
                 .filter(F.col("bucket").isin(buckets))

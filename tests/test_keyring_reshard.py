@@ -1,18 +1,18 @@
-"""Keyring ring-rebalance runbook, G→2G (r13, VERDICT r12 #8).
+"""Keyring restarts and ring-count changes, G=2 → G'=4.
 
-The G-way sharded LRU ring is the one stateful operator with topology
-baked into its state key (``ring_id = event_id % G``, ownership
-``key_id % G``); at 100 TB G must grow. This pins the operator story,
-mirroring the state-store provider migration runbook
-(``test_rocksdb_state.py``):
+The G-way sharded LRU ring routes records by ``event_id % G`` and keys by
+``key_id % G``; its state is one batch count per ring, so a restart uses
+the key list and ring count it is given. This pins three restart stories
+on the same source, each checked only on the rows that run wrote:
 
-1. WHY the guard exists: restarting an existing checkpoint with a larger
-   G actually runs — and actually breaks mutual exclusion (a moved key
-   rotated by two rings at once), observed live with the guard bypassed.
-2. FAIL LOUDLY: ``guard_ring_topology`` raises on the ring-count change.
-3. RECIPE: drain → fresh checkpoint at G'=2G → full replay from the
-   lake converges to a valid G'-ring rotation — disjoint + complete key
-   ownership, no record lost.
+1. SAME G: a restart over new data continues every ring's batch ids and
+   its round-robin key order from the first run.
+2. IN-PLACE RESHARD: restarting the same checkpoint at G'=4 yields a valid
+   4-ring rotation — every key is rotated only by its owning ring, and no
+   record is lost. No key list lives in state, so no ring can keep
+   handing out a key whose owner moved.
+3. REPLAY: a fresh checkpoint at G'=4 over the full source converges to a
+   valid 4-ring rotation with every ring exercised.
 """
 
 from __future__ import annotations
@@ -21,11 +21,9 @@ import glob
 import os
 import shutil
 
-import pytest
 from pyspark.sql import functions as F
 
 from aws_localstack_stream_processing_spark.streaming.keyring import (
-    guard_ring_topology,
     lru_keyring_assign,
     ring_of_key,
 )
@@ -90,55 +88,45 @@ def _assert_valid_rotation(rows, n_rings, n_events):
     )
     # complete: no record lost in the sharding
     assert sum(n for _, _, _, n in rows) == n_events
+    # round-robin: ring-local batch b takes the ring's key of rank b % size
+    for ring_id, b, key_id, _ in rows:
+        ring_keys = [k for k in KEY_IDS if ring_of_key(k, n_rings) == ring_id]
+        assert key_id == ring_keys[b % len(ring_keys)]
 
 
-def test_reshard_runbook_guard_breakage_and_replay(spark, tmp_path):
+def test_restart_reshard_and_replay(spark, tmp_path):
     src = str(tmp_path / "src")
     os.makedirs(src)
-    ckpt = str(tmp_path / "ckpt_g2")
+    ckpt = str(tmp_path / "ckpt")
+    n_slice_events = N_SLICES * ROWS_PER_SLICE
 
-    # phase 1: G=2 stream over 3 slices, topology recorded
-    guard_ring_topology(ckpt, G)
+    # G=2 stream over 3 slices
     _add_slices(spark, tmp_path, src, 0, N_SLICES)
-    rows = _run(spark, src, ckpt, str(tmp_path / "out1"), G)
-    _assert_valid_rotation(rows, G, N_SLICES * ROWS_PER_SLICE)
+    first = _run(spark, src, ckpt, str(tmp_path / "out_first"), G)
+    _assert_valid_rotation(first, G, n_slice_events)
 
-    # same-G restart over new data is an ordinary restart: guard silent
-    guard_ring_topology(ckpt, G)
+    # 1 — same-G restart over new data: each ring's batch ids continue
+    # where the first run stopped, and so does its round-robin
     _add_slices(spark, tmp_path, src, N_SLICES, 2 * N_SLICES)
-    rows = _run(spark, src, ckpt, str(tmp_path / "out1"), G)
-    _assert_valid_rotation(rows, G, 2 * N_SLICES * ROWS_PER_SLICE)
+    again = _run(spark, src, ckpt, str(tmp_path / "out_again"), G)
+    _assert_valid_rotation(again, G, n_slice_events)
+    for g in range(G):
+        ids = sorted(b for r, b, _, _ in first + again if r == g)
+        n_first = sum(1 for r, _, _, _ in first if r == g)
+        assert ids == list(range(len(ids)))
+        assert min(b for r, b, _, _ in again if r == g) == n_first
 
-    # phase 2 — WHY: bypass the guard, restart the SAME checkpoint at
-    # G'=4. Rings 0..1 restore old-topology key lists, rings 2..3 seed
-    # fresh — a moved key (key_id % 4 in {2,3}) is rotated by two rings
-    # at once: the mutual-exclusion contract is silently broken.
+    # 2 — in-place reshard: the same checkpoint restarted at G'=4 rotates
+    # every key from its new owning ring only
     _add_slices(spark, tmp_path, src, 2 * N_SLICES, 3 * N_SLICES)
-    rows = _run(spark, src, ckpt, str(tmp_path / "out1"), G2)
-    used_in = {}
-    for ring_id, _, key_id, _ in rows:
-        used_in.setdefault(key_id, set()).add(ring_id)
-    violations = {
-        k: rings
-        for k, rings in used_in.items()
-        if rings != {ring_of_key(k, G2)}
-    }
-    assert violations, (
-        "expected the bypassed in-place reshard to break key ownership; "
-        "if Spark starts refusing this restart, the guard can be retired"
+    resharded = _run(spark, src, ckpt, str(tmp_path / "out_reshard"), G2)
+    _assert_valid_rotation(resharded, G2, n_slice_events)
+
+    # 3 — fresh checkpoint at G'=4, replay the full source from the lake
+    rows = _run(
+        spark, src, str(tmp_path / "ckpt_g4"), str(tmp_path / "out_replay"), G2
     )
-
-    # phase 3 — FAIL LOUDLY: the guard blocks exactly this restart
-    with pytest.raises(RuntimeError, match="reshard blocked"):
-        guard_ring_topology(ckpt, G2)
-
-    # phase 4 — RECIPE: drain, FRESH checkpoint at G'=4, replay the full
-    # source from the lake; converges to a valid 4-ring rotation
-    ckpt2 = str(tmp_path / "ckpt_g4")
-    guard_ring_topology(ckpt2, G2)
-    rows = _run(spark, src, ckpt2, str(tmp_path / "out2"), G2)
-    _assert_valid_rotation(rows, G2, 3 * N_SLICES * ROWS_PER_SLICE)
-    # every ring that handed out keys only ever used its own subset —
-    # and with 9 slices every new ring was exercised
+    _assert_valid_rotation(rows, G2, 3 * n_slice_events)
+    # with 9 slices every new ring was exercised
     assert {r for r, _, _, _ in rows} == set(range(G2))
     shutil.rmtree(str(tmp_path), ignore_errors=True)

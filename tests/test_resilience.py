@@ -12,7 +12,6 @@ from __future__ import annotations
 import pytest
 
 from aws_localstack_stream_processing_spark.streaming.resilience import (
-    is_transient_spawn_failure,
     query_never_progressed,
     start_and_await,
 )
@@ -34,20 +33,6 @@ class _FakeQuery:
     def awaitTermination(self):
         if self.exc is not None:
             raise self.exc
-
-
-def test_transient_spawn_failure_classification():
-    assert is_transient_spawn_failure(_SPAWN_MSG)
-    # a worker-spawn failure AFTER data was committed is not restart-safe
-    committed = _SPAWN_MSG.replace(
-        "Committed Offsets: {}", 'Committed Offsets: {"f": 3}'
-    )
-    assert not is_transient_spawn_failure(committed)
-    # an unrelated stream failure is never retried
-    assert not is_transient_spawn_failure(
-        "terminated with exception: division by zero\n"
-        "Current Committed Offsets: {}\n"
-    )
 
 
 def test_retries_spawn_flake_and_returns_successful_query():
@@ -77,15 +62,23 @@ def test_reraises_after_bounded_retries():
 
 
 def test_non_transient_failure_not_retried():
-    attempts = []
+    # an unrelated stream failure is never retried, even before any commit
+    for exc in (
+        ValueError("schema mismatch in batch 0"),
+        RuntimeError(
+            "terminated with exception: division by zero\n"
+            "Current Committed Offsets: {}\n"
+        ),
+    ):
+        attempts = []
 
-    def start():
-        attempts.append(1)
-        return _FakeQuery(ValueError("schema mismatch in batch 0"))
+        def start():
+            attempts.append(1)
+            return _FakeQuery(exc)
 
-    with pytest.raises(ValueError):
-        start_and_await(start)
-    assert len(attempts) == 1
+        with pytest.raises(type(exc)):
+            start_and_await(start)
+        assert len(attempts) == 1
 
 
 class _FakeQueryWithProgress(_FakeQuery):

@@ -139,10 +139,9 @@ def test_keyring_multibatch_rotation(spark):
 
     # pure-logic invariant check across simulated micro-batches
     key_ids = [0, 1, 2]
-    st = {"ring": [[k, i] for i, k in enumerate(key_ids)], "clock": 0, "batches": 0}
     out = []
     for _mb in range(4):  # 4 micro-batches of 250 rows, batch_size 100
-        out += _assign_batches(250, st, 100)
+        out += _assign_batches(250, len(out), key_ids, 100)
     batch_ids = [b for b, _, _ in out]
     keys = [k for _, k, _ in out]
     sizes = [n for _, _, n in out]
