@@ -15,6 +15,10 @@ At warehouse scale the anti-join is a broadcast of the batch's keys against
 the key column of the sink (or a MERGE on a Delta/Iceberg table — same
 logical contract, swap the implementation here).
 
+Each put-if-absent batch is shuffled once, on its bucket; the
+within-batch dedup rides that shuffle, and each bucket lands in one write
+task, so a batch adds one file per (batch, bucket) it touches.
+
 All three stores share one layout, :class:`BucketedStore`: a root of
 ``<BUCKET_COL>=N/`` hive partitions plus a ``_slsp_meta.json`` sidecar
 recording the bucket count. Every rewrite of that layout — ``resplit``,
@@ -262,28 +266,50 @@ class BucketedStore:
         )
         return fresh.join(F.broadcast(hits), key_col, "left_anti")
 
+    def _routed(self, df: DataFrame, keys: list[str]) -> DataFrame:
+        """The batch as every put-if-absent write takes it: BUCKET_COL
+        set, shuffled ONCE on it, and deduped on ``keys + [BUCKET_COL]``.
+
+        The bucket is a function of the key, so that dedup drops exactly
+        the rows ``dropDuplicates(keys)`` would, and the shuffle's hash
+        partitioning on BUCKET_COL already meets the dedup's required
+        distribution, so the dedup adds no exchange of its own. Each
+        bucket lands in one task, so a write of the batch makes one file
+        per bucket, not one per (task, bucket).
+
+        Trade-off: the dedup and the write of one batch run on at most
+        ``n_buckets`` tasks; :meth:`resplit` raises that cap."""
+        from pyspark.sql import functions as F
+
+        return (
+            df.withColumn(self.BUCKET_COL, self._bucket_expr())
+            .repartition(F.col(self.BUCKET_COL))
+            .dropDuplicates(keys + [self.BUCKET_COL])
+        )
+
     def _put_if_absent(
         self, df: DataFrame, keys: list[str], seen: DataFrame | None = None
     ) -> None:
         """The one put-if-absent append on the (composite) key ``keys``.
-        Within-batch duplicates collapse first; cross-batch and cross-run
+        The batch is routed first (:meth:`_routed`): within-batch
+        duplicates collapse inside its one shuffle, and every write below
+        adds one file per (batch, bucket). Cross-batch and cross-run
         duplicates drop via :meth:`probe_plan` against the bucket-pruned
         store rows, or against ``seen`` when the caller already probed
-        (see ``BandIndexSink.append_batch``)."""
+        (see ``BandIndexSink.append_batch``); the probe's two broadcast
+        joins keep the routed partitioning, so no second shuffle runs."""
         spark = df.sparkSession
         present = self.exists(spark)  # syncs n_buckets before bucketing
-        fresh = df.dropDuplicates(keys).withColumn(
-            self.BUCKET_COL, self._bucket_expr()
-        )
+        fresh = self._routed(df, keys)
         if not present:
             fresh.write.mode("append").partitionBy(self.BUCKET_COL).parquet(
                 self.path
             )
             self._write_meta()
             return
-        # persist the deduped batch across its two consumers (the bucket
-        # collect and the probe+write job) — unpersisted, the batch dedup
-        # re-ran per job (r13, guide §5; batch-bounded)
+        # persist the routed batch across its two consumers (the bucket
+        # collect and the probe+write job) — unpersisted, the shuffle and
+        # the dedup re-ran per job (r13, guide §5; batch-bounded)
         fresh = fresh.persist()
         try:
             if seen is None:
@@ -319,8 +345,11 @@ class BucketedStore:
         the whole store is replaced by :func:`swap_dirs`. A crash at any
         step reopens as either the old store with its old count or the
         new store with its new count. Must run with the owning stream
-        stopped.
+        stopped. The staged rows are shuffled once on the new bucket, so
+        the new layout holds one file per bucket.
         """
+        from pyspark.sql import functions as F
+
         if not self.exists(spark):
             raise RuntimeError(f"no bucketed store at {self.path}")
         if n_buckets == self.n_buckets:
@@ -328,7 +357,9 @@ class BucketedStore:
         rows = self._read_store(spark).drop(self.BUCKET_COL)
         self.n_buckets = int(n_buckets)
         staged = self._stage(
-            rows.withColumn(self.BUCKET_COL, self._bucket_expr())
+            rows.withColumn(self.BUCKET_COL, self._bucket_expr()).repartition(
+                F.col(self.BUCKET_COL)
+            )
         )
         self._write_meta(staged)
         swap_dirs(self.path, staged)
@@ -339,8 +370,12 @@ class KeyedParquetSink(BucketedStore):
     """Append-only parquet table that behaves like a keyed KV store.
 
     Contract: ``key_col`` is a non-null content hash (the reference's
-    DynamoDB PK, signer/index.js:229-242) — a NULL key has no bucket
-    (``xxhash64(NULL)`` is NULL) and would bypass the probe.
+    DynamoDB PK, signer/index.js:229-242). A NULL key does get a bucket
+    (``xxhash64(NULL)`` is the seed, 42, so bucket 10 of 16), but it
+    bypasses the probe: NULL never equals NULL in the probe's semi join,
+    so the anti join keeps the row and every redelivery appends another
+    copy. The sign path cannot produce one: its key is
+    ``sha2(concat_ws(...))``, which is never NULL.
 
     Layout: hash-bucketed by key — every row lands in partition
     ``__bucket = pmod(xxhash64(key), n_buckets)``. The put-if-absent
@@ -405,7 +440,8 @@ class KeyedParquetSink(BucketedStore):
         """Bucket-local small-file compaction.
 
         An append-only bucketed store accrues one file per (batch,
-        bucket); after B batches every probe of a bucket opens ~B tiny
+        bucket) (:meth:`_routed` sends each bucket of a batch to one write
+        task); after B batches every probe of a bucket opens ~B tiny
         files — the classic streaming-sink small-files problem (at
         100 TB: footer reads and NameNode/listing pressure dominate).
         Rewrite each bucket whose file count exceeds the threshold into

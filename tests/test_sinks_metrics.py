@@ -8,6 +8,38 @@ from pyspark.sql import functions as F
 from .conftest import SF_DIR
 
 
+def _final_plan_nodes(df):
+    """The executed plan's nodes, walking the AQE-final tree (planfp's
+    rules) through query stages to the real operators."""
+    stack, nodes = [df._jdf.queryExecution().executedPlan()], []
+    while stack:
+        node = stack.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if cls.endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        nodes.append(node)
+        children = node.children()
+        for i in range(children.size()):
+            stack.append(children.apply(i))
+    return nodes
+
+
+def _keyed(ids):
+    """``ids`` (a DataFrame with column ``id``) as a keyed-sink batch."""
+    return ids.select(
+        F.sha2(F.col("id").cast("string"), 256).alias("key"),
+        F.lit("v").alias("payload"),
+    )
+
+
+def _files_per_bucket(sink) -> list[int]:
+    return [len(sink._bucket_files(b)) for b in range(sink.n_buckets)]
+
+
 def test_keyed_sink_converges_without_checkpoint(spark, tmp_path):
     """Re-delivering overlapping batches — with NO shared checkpoint —
     leaves exactly one row per key (DynamoDB-put convergence, S8/T2)."""
@@ -101,7 +133,9 @@ def test_keyed_sink_never_broadcasts_the_store(spark, tmp_path):
         F.sha2(F.col("id").cast("string"), 256).alias("key"),
         F.lit("v").alias("payload"),
     )
-    fresh = batch.dropDuplicates(["key"])
+    # persisted as in the sink: the cache keeps the anti join above the
+    # routing shuffle (unpersisted, Spark pushes it below)
+    fresh = sink._routed(batch, ["key"]).persist()
     seen = spark.read.parquet(sink.path).select("key")
     new = KeyedParquetSink.probe_plan(seen, fresh, "key")
     new.collect()
@@ -135,6 +169,7 @@ def test_keyed_sink_never_broadcasts_the_store(spark, tmp_path):
     # and the store itself is never the BUILD side of the final anti join
     anti = [ln for ln in lines if "LeftAnti" in ln]
     assert anti, plan
+    fresh.unpersist()
     # convergence semantics unchanged: replay the same batch, count stable
     sink.upsert_batch(batch, 1)
     n1 = sink.read(spark).count()
@@ -172,9 +207,7 @@ def test_keyed_sink_probe_prunes_to_affected_buckets(spark, tmp_path):
         F.sha2(F.col("id").cast("string"), 256).alias("key"),
         F.lit("v").alias("payload"),
     )
-    fresh = batch.dropDuplicates(["key"]).withColumn(
-        sink.BUCKET_COL, sink._bucket_expr()
-    )
+    fresh = sink._routed(batch, ["key"]).persist()
     buckets = [r[0] for r in fresh.select(sink.BUCKET_COL).distinct().collect()]
     assert 1 <= len(buckets) <= 3
     seen = (
@@ -199,27 +232,16 @@ def test_keyed_sink_probe_prunes_to_affected_buckets(spark, tmp_path):
     affected_files = sum(
         files_in(f"{sink.BUCKET_COL}={b}") for b in buckets
     )
-    # walk the AQE-final tree (planfp's rules) to reach the real scans
-    stack = [probe._jdf.queryExecution().executedPlan()]
-    scanned = []
-    while stack:
-        node = stack.pop()
-        cls = node.getClass().getSimpleName()
-        if cls == "AdaptiveSparkPlanExec":
-            stack.append(node.executedPlan())
-            continue
-        if cls.endswith("QueryStageExec"):
-            stack.append(node.plan())
-            continue
-        if cls == "FileSourceScanExec":
-            scanned.append(int(node.metrics().apply("numFiles").value()))
-        children = node.children()
-        for i in range(children.size()):
-            stack.append(children.apply(i))
+    scanned = [
+        int(node.metrics().apply("numFiles").value())
+        for node in _final_plan_nodes(probe)
+        if node.getClass().getSimpleName() == "FileSourceScanExec"
+    ]
     assert affected_files in scanned, (scanned, affected_files, total_files)
     assert all(s < total_files for s in scanned)
     # and the pruned probe still answers correctly: all 3 keys are dups
     assert probe.count() == 0
+    fresh.unpersist()
     # a genuinely new key in an already-probed bucket still lands
     sink.upsert_batch(
         spark.range(4000, 4001).select(
@@ -421,9 +443,7 @@ def test_keyed_sink_resplit_doubles_buckets(spark, tmp_path):
     assert sink2.n_buckets == 32
     assert sink2.read(spark).count() == 4010
     # and the pruned probe still reads only affected buckets
-    fresh = batch.dropDuplicates(["key"]).withColumn(
-        sink2.BUCKET_COL, sink2._bucket_expr()
-    )
+    fresh = sink2._routed(batch, ["key"]).persist()
     buckets = [
         r[0] for r in fresh.select(sink2.BUCKET_COL).distinct().collect()
     ]
@@ -436,6 +456,7 @@ def test_keyed_sink_resplit_doubles_buckets(spark, tmp_path):
     plan = probe._jdf.queryExecution().executedPlan().toString()
     assert f"PartitionFilters: [{sink2.BUCKET_COL}" in plan, plan
     assert probe.count() == 0  # every key already present
+    fresh.unpersist()
 
 
 def test_store_schema_cache_survives_batches_and_resets_on_resplit(
@@ -468,3 +489,116 @@ def test_store_schema_cache_survives_batches_and_resets_on_resplit(
     assert sink._store_schema is None
     rows2 = sorted(tuple(r) for r in sink.read(spark).collect())
     assert rows2 == rows1
+
+
+# -- one shuffle per batch: routed on the bucket, one file per bucket -------
+
+
+def test_keyed_sink_writes_one_file_per_bucket_per_batch(spark, tmp_path):
+    """Each bucket of a batch goes to one write task, so every batch —
+    the first write and the probe path alike — adds exactly one file to
+    each bucket it touches, however many partitions the batch arrives
+    in. Per-(task, bucket) files made every later probe open tasks x
+    batches files per bucket."""
+    from aws_localstack_stream_processing_spark.streaming.sinks import (
+        KeyedParquetSink,
+    )
+
+    sink = KeyedParquetSink(str(tmp_path / "kv"), "key")
+    # 12k-key batches in 8 input partitions: the first write, then a
+    # probe-path batch half present (6k dups, 6k new), then all new
+    batches = [(0, 12_000), (6_000, 18_000), (18_000, 30_000)]
+    before = [0] * sink.N_BUCKETS
+    for i, (lo, hi) in enumerate(batches):
+        batch = _keyed(spark.range(lo, hi, numPartitions=8))
+        assert batch.rdd.getNumPartitions() == 8
+        sink.upsert_batch(batch, i)
+        after = _files_per_bucket(sink)
+        # 6k+ new keys touch all 16 buckets
+        assert [a - b for a, b in zip(after, before)] == [1] * sink.N_BUCKETS, (
+            i,
+            before,
+            after,
+        )
+        before = after
+    assert sink.read(spark).count() == 30_000
+
+
+def test_routed_batch_shuffles_once_on_the_bucket(spark, tmp_path):
+    """Plan lint: the routed batch (what every put-if-absent write takes)
+    has exactly ONE shuffle exchange, hash-partitioned on the bucket
+    column — the within-batch dedup needs no exchange of its own, since
+    the bucket is a function of the key. A dedup on the key alone shuffles
+    on the key and leaves the write one file per (task, bucket)."""
+    from aws_localstack_stream_processing_spark.streaming.sinks import (
+        KeyedParquetSink,
+    )
+
+    sink = KeyedParquetSink(str(tmp_path / "kv"), "key")
+    routed = sink._routed(
+        _keyed(spark.range(0, 12_000, numPartitions=8)), ["key"]
+    )
+    routed.collect()
+    exchanges = [
+        node.outputPartitioning().toString()
+        for node in _final_plan_nodes(routed)
+        if node.getClass().getSimpleName() == "ShuffleExchangeExec"
+    ]
+    assert len(exchanges) == 1, exchanges
+    assert exchanges[0].startswith(f"hashpartitioning({sink.BUCKET_COL}#"), (
+        exchanges
+    )
+
+
+def test_keyed_sink_dedups_copies_across_input_partitions(spark, tmp_path):
+    """Within-batch copies of one key that sit in DIFFERENT input
+    partitions are stored once — the dedup runs after the bucket shuffle
+    brings them together — and a later batch that redelivers them
+    appends nothing."""
+    from aws_localstack_stream_processing_spark.streaming.sinks import (
+        KeyedParquetSink,
+    )
+
+    sink = KeyedParquetSink(str(tmp_path / "kv"), "key")
+    # ids k, k+5000, k+10000, k+15000 carry one key; range partitions
+    # hold contiguous id blocks, so each key's 4 copies span 4 partitions
+    batch = _keyed(
+        spark.range(0, 20_000, numPartitions=8).select(
+            (F.col("id") % 5_000).alias("id")
+        )
+    )
+    spread = (
+        batch.withColumn("part", F.spark_partition_id())
+        .groupBy("key")
+        .agg(F.countDistinct("part").alias("parts"))
+    )
+    assert spread.filter("parts < 4").count() == 0
+    sink.upsert_batch(batch, 0)
+    out = sink.read(spark)
+    assert out.count() == 5_000
+    assert out.select("key").distinct().count() == 5_000
+    files = _files_per_bucket(sink)
+    sink.upsert_batch(batch, 1)  # redelivery, copies and all
+    assert sink.read(spark).count() == 5_000
+    assert _files_per_bucket(sink) == files
+
+
+def test_resplit_writes_one_file_per_bucket(spark, tmp_path):
+    """resplit routes its staged rows on the new bucket, so after a
+    resplit every bucket directory holds exactly one file — however many
+    per-batch files each old bucket had accrued."""
+    from aws_localstack_stream_processing_spark.streaming.sinks import (
+        KeyedParquetSink,
+    )
+
+    sink = KeyedParquetSink(str(tmp_path / "kv"), "key")
+    for i in range(4):
+        sink.upsert_batch(
+            _keyed(spark.range(i * 1_000, (i + 1) * 1_000, numPartitions=4)),
+            i,
+        )
+    assert min(_files_per_bucket(sink)) > 1  # old buckets hold many files
+    rows = sorted(r.key for r in sink.read(spark).collect())
+    sink.resplit(spark, 32)
+    assert _files_per_bucket(sink) == [1] * 32
+    assert sorted(r.key for r in sink.read(spark).collect()) == rows
